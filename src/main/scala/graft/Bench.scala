@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 
 /** Benchmark main: runs the headline queries on
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line
@@ -106,7 +107,10 @@ object Bench {
       SparkEntry.queries(name)(spark, sfDir)
         .write.mode("overwrite").format("noop").save()
     // Untimed warmup: JIT + codegen + parquet footer cache, so the first
-    // timed query doesn't absorb JVM startup (±30% noise otherwise).
+    // timed query doesn't absorb JVM startup (±30% noise otherwise). The
+    // codegen part holds only because Session.local() sizes Spark's
+    // generated-class cache above one pass's 231 classes; at Spark's
+    // 100-entry default every pass recompiled all of them.
     names.foreach { n =>
       try run(n)
       catch { case e: Throwable =>
@@ -165,12 +169,24 @@ object Bench {
     // per pass: (conservative canary, pre, post, times)
     val passBuf =
       Vector.newBuilder[(Double, Double, Double, Map[String, Double])]
+    // per pass: Janino compiles and JIT seconds spent inside the timed
+    // queries — a warm pass compiles nothing once the codegen cache holds
+    // the working set, so a nonzero count is recompilation the wall paid
+    val jit = java.lang.management.ManagementFactory.getCompilationMXBean
+    def jitS: Double =
+      if (jit != null && jit.isCompilationTimeMonitoringSupported)
+        jit.getTotalCompilationTime / 1e3
+      else Double.NaN
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compileBuf = Vector.newBuilder[(Long, Double)]
     var nPass = 0
     var bestWeather = Double.PositiveInfinity
     while (nPass < maxPasses &&
         (nPass < minPasses || bestWeather > canaryBand)) {
       val cPre = hostCanaryParallel()
+      val (n0, j0) = (compiles, jitS)
       val times = names.map(n => n -> timed(n)).toMap
+      compileBuf += ((compiles - n0, jitS - j0))
       val cPost = hostCanaryParallel()
       val c = math.min(cPre, cPost)
       bestWeather = math.min(bestWeather, c)
@@ -229,10 +245,17 @@ object Bench {
       s""""canary_par_ref":$canaryParRef,""" +
       s""""value_weather_norm":${math.rint(normTotal * 1000) / 1000},""" +
       s""""sf":"$sfDir"}"""
+    // the per-pass compile counters ride only in the file copy, so the
+    // stdout line keeps its shape; NaN (no JIT timing) prints as -1
+    val perPass = compileBuf.result()
+    val sidecar = json.stripSuffix("}") +
+      s""","codegen_compiles":${perPass.map(_._1).mkString("[", ",", "]")},""" +
+      s""""jit_compile_s":${perPass.map { case (_, j) =>
+        if (j.isNaN) -1.0 else math.rint(j * 1000) / 1000 }.mkString("[", ",", "]")}}"""
     // stdout for the driver's scraper (raw via build.sbt outputStrategy),
     // plus a file copy in case stdout is decorated by the launcher.
     println(json)
-    java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH.json"), json)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH.json"), sidecar)
     spark.stop()
   }
 }
