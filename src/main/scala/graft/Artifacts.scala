@@ -296,11 +296,12 @@ object Artifacts {
     * share the frame across consumers (`graft.artifacts.reuse=true`,
     * the default). With reuse off, every call rebuilds for exactly ONE
     * consumer, so the final checkpoint write + read-back is pure
-    * overhead — measured 1.15 → 1.04 s on p02 at sf0.1 (P02CutProbe,
-    * min of 6 same-session). Only for builds whose consumer binds the
-    * returned frame ONCE; builders consumed from multiple join sides
-    * of a single plan (ivfAssigned, the kmeans assignment) keep
-    * [[stage]] so the no-reuse path cannot duplicate their subtree. */
+    * overhead — measured 1.15 → 1.04 s on p02 at sf0.1 (min of 6
+    * same-session; PLANS.md, "Decided A/B timers deleted"). Only for
+    * builds whose consumer binds the returned frame ONCE; builders
+    * consumed from multiple join sides of a single plan (ivfAssigned,
+    * the kmeans assignment) keep [[stage]] so the no-reuse path cannot
+    * duplicate their subtree. */
   def stageIfShared(s: SparkSession, df: DataFrame): DataFrame =
     if (s.conf.get("graft.artifacts.reuse", "true") == "true") stage(s, df)
     else df

@@ -17,14 +17,14 @@ import org.apache.spark.storage.StorageLevel
   *    HDFS/object storage via `SparkContext.setCheckpointDir` on a real
   *    cluster). Survives executor loss; costs a filesystem write, plus
   *    Spark's lazy-checkpoint recompute of the subtree on first action.
-  *  - `persist`: `MEMORY_AND_DISK` cache. Keeps lineage, so a lost
-  *    block is recomputed, not fatal; blocks stay until unpersist/GC —
-  *    the middle ground when re-running the stage is cheaper than
-  *    writing it out.
   *  - `none`: pass-through; the subtree recomputes at every reuse
   *    (correct, shuffle-heavy — for measuring what staging saves).
   *
-  * All modes return the same rows; ReuseStageSpec pins that. */
+  * Any other value is rejected with an IllegalArgumentException. There
+  * is no cache-backed mode: cached blocks outlive the invocation, which
+  * would reuse results across invocations outside
+  * `graft.artifacts.reuse`. All modes return the same rows;
+  * ReuseStageSpec pins that. */
 object Stage {
 
   implicit class StageOps(private val df: DataFrame) extends AnyVal {
@@ -56,25 +56,23 @@ object Stage {
           sc.setCheckpointDir(
             s"${System.getProperty("java.io.tmpdir")}/graft-checkpoint")
         df.checkpoint(eager = false)
-      case "persist" => df.persist(StorageLevel.MEMORY_AND_DISK)
       case "none" => df
       case other => throw new IllegalArgumentException(
-        s"graft.stage.materialize must be one of local|reliable|persist|none," +
+        s"graft.stage.materialize must be one of local|reliable|none," +
           s" got '$other'")
     }
   }
 
   /** [[StageOps.stagedDisk]]: same mode switch, disk-backed levels.
     * `local` keeps localCheckpoint's lineage-truncation semantics (and
-    * its lost-executor caveat) but stores the blocks DISK_ONLY;
-    * `persist` likewise. `reliable` and `none` are unchanged — a
-    * reliable checkpoint is already a filesystem write. */
+    * its lost-executor caveat) but stores the blocks DISK_ONLY.
+    * `reliable` and `none` are unchanged — a reliable checkpoint is
+    * already a filesystem write. */
   def materializeDisk(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     spark.conf.get("graft.stage.materialize", "local") match {
       case "local" =>
         df.localCheckpoint(eager = false, StorageLevel.DISK_ONLY)
-      case "persist" => df.persist(StorageLevel.DISK_ONLY)
       case _ => materialize(df)
     }
   }

@@ -172,7 +172,8 @@ trait PipelineCore extends QueryModule {
     // round-robin first pays a LOCAL SORT of every input partition
     // (sortBeforeRepartition, SPARK-23207's retry-determinism guard) —
     // hashing a unique key is deterministic under retries for free and
-    // skips the sort. A/B (DocsBalanceProbe, min of 6 / 4 same-session):
+    // skips the sort. A/B (min of 6 / 4 same-session; PLANS.md,
+    // "Decided A/B timers deleted"):
     // minhash sketch 0.268→0.231 s sf0.1, 0.458→0.399 s sf1; shingle+
     // digest 0.171→0.163 / 0.358→0.316 — every sample lower. Width stays
     // explicit so AQE cannot byte-coalesce the compute-bound map stages

@@ -85,8 +85,9 @@ trait PipelineDedup extends PipelineVectors {
   /** The pre-native declarative sketch (explode shingle rows → md5 hex →
     * conv the 60/40-bit halves → groupBy doc with 12 mins +
     * collect_set) — the literal shape of the DuckDB oracle SQL, kept as
-    * the equivalence-test baseline (MinHashSigSpec) and the A/B
-    * comparison point (MinHashSigBench). */
+    * the equivalence-test baseline (MinHashSigSpec); its A/B against
+    * the native sketch is recorded in PLANS.md, "Round-10 (cont.):
+    * one-pass native sketch family". */
   private[graft] def minhashSigOfDeclarative(docs: DataFrame): DataFrame = {
     val sh = shingleRowsOf(docs, ShingleW)
       .withColumn("dg", md5(col("shingle")))
@@ -209,9 +210,9 @@ trait PipelineDedup extends PipelineVectors {
       .dropDuplicates("doc_id", "hv")
 
 
-  /** The pre-SimHashAgg declarative form, kept as the A/B benchmark
-    * baseline (graft.tools.SimHashBench) and cross-checked equal in
-    * SimHashAggSpec. */
+  /** The pre-SimHashAgg declarative form, cross-checked equal in
+    * SimHashAggSpec; its A/B against the native aggregate is the p03
+    * row of PLANS.md's plan table. */
   private[graft] def simhashFpExplode(s: SparkSession, d: String): DataFrame =
     simhashFeatures(s, d)
       .select(col("doc_id"), col("hv"),

@@ -612,11 +612,11 @@ trait PipelineText extends PipelineCore {
     * Catalyst extension) instead of the explode(sequence)+element_at
     * build: totals via one map-side-combinable groupBy, the top shingle
     * via the row_number()<=1 pattern TopKRewriteRule re-plans onto the
-    * bounded-heap operator. ShingleGenBench measured the generator at
-    * parity (0.96x) with the codegen'd explode form under the p02 sketch
-    * consumer at sf0.1 — digest+agg work dominates — so the generator is
-    * surfaced here and via SQL `shingle_rows(...)` while p02 keeps its
-    * measured form (PLANS.md). */
+    * bounded-heap operator. The generator measured at parity (0.96x)
+    * with the codegen'd explode form under the p02 sketch consumer at
+    * sf0.1 — digest+agg work dominates — so the generator is surfaced
+    * here and via SQL `shingle_rows(...)` while p02 keeps its measured
+    * form (PLANS.md, "Round-7: native shingle Generator A/B"). */
   private[queries] def p59ShingleVocab: Q = (s, d) => {
     val sh = docsBalanced(s, d)
       .select(col("lang"), graft.functions.ShingleRows.shingleRows(col("text"), ShingleW))

@@ -15,7 +15,13 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - every `FooSpec` named anywhere in src/main (scaladoc, comments,
   *    code) must exist as a test source file, and
   *  - every "PLANS.md round N" citation must resolve to a round-N
-  *    section header in PLANS.md.
+  *    section header in PLANS.md, and
+  *  - every `FooBench`/`FooProbe` tool named in src/main, README.md or
+  *    the verify skill must exist as a main source file (PLANS.md is
+  *    history and may name deleted tools).
+  *
+  * It also keeps the suite hermetic: no test source may name an
+  * absolute path outside the checkout and the shared test-data root.
   *
   * Pure filesystem checks — no SparkSession, runs in milliseconds.
   */
@@ -37,15 +43,17 @@ class CitationsSpec extends AnyFunSuite {
     finally stream.close() // Files.walk holds directory handles open
   }
 
+  private def sourceNames(dir: String): Set[String] =
+    scalaFiles(repoRoot.resolve(dir))
+      .map(_.getFileName.toString.stripSuffix(".scala"))
+      .toSet
+
   private lazy val mainTexts: Seq[(Path, String)] =
     scalaFiles(repoRoot.resolve("src/main/scala"))
       .map(p => p -> Files.readString(p))
 
   test("every *Spec cited in src/main exists in the test tree") {
-    val exist: Set[String] =
-      scalaFiles(repoRoot.resolve("src/test/scala"))
-        .map(_.getFileName.toString.stripSuffix(".scala"))
-        .toSet
+    val exist = sourceNames("src/test/scala")
     // names ending in Spec that are Spark/JDK API, not our tests —
     // grows only if main code legitimately uses such a type
     val apiAllowlist = Set("WindowSpec")
@@ -77,5 +85,39 @@ class CitationsSpec extends AnyFunSuite {
     assert(unresolved.isEmpty,
       s"\nphantom PLANS.md citations (write the record before citing it):\n  " +
         unresolved.mkString("\n  "))
+  }
+
+  test("every *Bench / *Probe tool cited in src/main and the docs exists") {
+    val exist = sourceNames("src/main/scala")
+    val docs = Seq("README.md", ".claude/skills/verify/SKILL.md")
+      .map(repoRoot.resolve).filter(Files.exists(_))
+      .map(p => p -> Files.readString(p))
+    val citePattern = """\b[A-Z]\w*(?:Bench|Probe)\b""".r
+    val missing = for {
+      (path, text) <- mainTexts ++ docs
+      name <- citePattern.findAllIn(text).toSeq.distinct
+      if !exist.contains(name)
+    } yield s"$path cites $name"
+    assert(missing.isEmpty,
+      s"\nphantom tool citations (restore the tool or fix the text):\n  " +
+        missing.mkString("\n  "))
+  }
+
+  test("no test source names an absolute path outside the repo and test data") {
+    // the shared fixture root (SparkSpec.Sf's parent) is the one place
+    // outside the checkout the suite may read; fixtures of its own live
+    // under src/test/resources
+    val allowed = Seq(
+      Paths.get(SparkSpec.Sf).getParent.toString, repoRoot.toString)
+    val absLiteral = """"(/[A-Za-z][^"\s]*)""".r
+    val offenders = for {
+      path <- scalaFiles(repoRoot.resolve("src/test/scala"))
+      m <- absLiteral.findAllMatchIn(Files.readString(path))
+      abs = m.group(1)
+      if !allowed.exists(r => abs == r || abs.startsWith(r + "/"))
+    } yield s"$path names $abs"
+    assert(offenders.isEmpty,
+      s"\nnon-hermetic test paths (commit a fixture instead):\n  " +
+        offenders.mkString("\n  "))
   }
 }

@@ -12,6 +12,12 @@ object SparkSpec {
   lazy val spark: SparkSession = Session.local()
   val Sf = "/root/testdata/sf0.001"
 
+  /** Filesystem path of a directory or file under src/test/resources. */
+  def resource(rel: String): String =
+    java.nio.file.Paths.get(Option(getClass.getClassLoader.getResource(rel))
+      .getOrElse(throw new IllegalStateException(s"no test resource $rel"))
+      .toURI).toString
+
   /** The per-test time-limit interrupter: dump EVERY thread's stack
     * first, then interrupt the test thread — so a wedged test (the
     * observed mode: Spark GC'd in-flight accumulators under heap

@@ -389,10 +389,10 @@ class PlanShapeSpec extends SparkSpec {
     assert(HeadlineFingerprints.keySet == graft.Bench.headline.toSet,
       "fingerprint list drifted from Bench.headline")
     // full cold plans: no checkpoint truncation, no cached artifacts —
-    // and no cache-manager substitution: a suite that ran Stage's
-    // `persist` mode earlier (ReuseStageSpec) leaves plan fragments in
-    // the global cache, and Spark would swap InMemoryRelation into any
-    // later matching subtree, changing fingerprints by suite order
+    // and no cache-manager substitution: a suite that cached a frame
+    // earlier leaves plan fragments in the global cache, and Spark would
+    // swap InMemoryRelation into any later matching subtree, changing
+    // fingerprints by suite order
     spark.catalog.clearCache()
     spark.conf.set("graft.stage.materialize", "none")
     spark.conf.set("graft.artifacts.reuse", "false")

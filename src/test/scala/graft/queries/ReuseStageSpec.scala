@@ -20,15 +20,11 @@ class ReuseStageSpec extends SparkSpec {
 
   test("all staging modes agree with the default") {
     val expect = run() // default: local
-    Seq("reliable", "persist", "none").foreach { mode =>
+    Seq("reliable", "none").foreach { mode =>
       spark.conf.set("graft.stage.materialize", mode)
       try assert(run() == expect, s"mode=$mode diverged")
       finally spark.conf.unset("graft.stage.materialize")
     }
-    // drop the persist-mode blocks from the shared session: cached plan
-    // fragments would otherwise substitute InMemoryRelation into any
-    // later suite's matching subtrees (order-dependent plan shapes)
-    spark.catalog.clearCache()
   }
 
   // a query whose corpus-sized subtrees use the DISK-backed cut
@@ -40,12 +36,11 @@ class ReuseStageSpec extends SparkSpec {
 
   test("all staging modes agree through stagedDisk cuts") {
     val expect = runDisk() // default: local → DISK_ONLY localCheckpoint
-    Seq("reliable", "persist", "none").foreach { mode =>
+    Seq("reliable", "none").foreach { mode =>
       spark.conf.set("graft.stage.materialize", mode)
       try assert(runDisk() == expect, s"mode=$mode diverged")
       finally spark.conf.unset("graft.stage.materialize")
     }
-    spark.catalog.clearCache()
   }
 
   test("stagedDisk local mode keeps blocks OFF the unified memory pool") {
@@ -86,13 +81,20 @@ class ReuseStageSpec extends SparkSpec {
   }
 
   test("an unknown staging mode is rejected loudly") {
-    spark.conf.set("graft.stage.materialize", "bogus")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        graft.Stage.materialize(Tables(spark, sf, "nation"))
-      }
-      assert(e.getMessage.contains("graft.stage.materialize"))
-    } finally spark.conf.unset("graft.stage.materialize")
+    // `persist` was a mode once: its cached blocks outlived the
+    // invocation, reuse that bypassed graft.artifacts.reuse
+    Seq("bogus", "persist").foreach { mode =>
+      spark.conf.set("graft.stage.materialize", mode)
+      try {
+        val nation = Tables(spark, sf, "nation")
+        Seq(
+          intercept[IllegalArgumentException](graft.Stage.materialize(nation)),
+          intercept[IllegalArgumentException](
+            graft.Stage.materializeDisk(nation))
+        ).foreach(e =>
+          assert(e.getMessage.contains("graft.stage.materialize"), mode))
+      } finally spark.conf.unset("graft.stage.materialize")
+    }
   }
 
   private def Tables = graft.Tables

@@ -11,8 +11,9 @@ import graft.{SparkSpec, Tables}
 /** The DSv2 text-table source: round-trip fidelity against the parquet
   * original, column-pruning and filter pushdown reaching the scan (plan-
   * asserted, not just result-asserted), file-granular parallelism, and
-  * the `.det` sidecar grammar including the reference's own testcase
-  * sidecars. */
+  * the `.det` sidecar grammar including the reference's testcase
+  * sidecar layout (a reconstructed CUSTOMER.det, see
+  * ReferenceTestcasesSpec). */
 class TextTableSpec extends SparkSpec {
   import spark.implicits._
 
@@ -116,8 +117,9 @@ class TextTableSpec extends SparkSpec {
     assert(joined.count() == customerCols.count())
   }
 
-  test("parses the reference's own .det sidecars (header lines, extra fields)") {
-    val schema = TextTables.schemaAt("/root/reference/testcases/CUSTOMER.det")
+  test("parses the reference's .det sidecar layout (header lines, extra fields)") {
+    val schema = TextTables.schemaAt(
+      SparkSpec.resource("reference/testcases/CUSTOMER.det"))
     assert(schema == StructType(Seq(
       StructField("cid", IntegerType, nullable = false),
       StructField("gender", IntegerType, nullable = false),

@@ -9,17 +9,25 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.sources.RandomDb
 
-/** The reference's LITERAL test suite, end to end: its `.det` schemas
+/** The reference's test suite, end to end: its commerce `.det` schemas
   * (CUSTOMER/CART/CARTDETAILS/BILL) generated by the deterministic
-  * RandomDB analogue, its `testcases/query1.sql`–`query10.sql` files
-  * parsed and planned verbatim by the mini-SQL front end, results
-  * checked against independently-built DataFrame algebra. This is the
-  * lifecycle the reference's demo scripts run (RandomDB →
-  * ConvertTxtToTbl → QueryMain, demo/setup.sh + demo/test.sh) at the
-  * same 100-row scale. */
+  * RandomDB analogue, its `testcases/query1.sql`–`query10.sql` parsed
+  * and planned by the mini-SQL front end, results checked against
+  * independently-built DataFrame algebra. This is the lifecycle the
+  * reference's demo scripts run (RandomDB → ConvertTxtToTbl →
+  * QueryMain, demo/setup.sh + demo/test.sh) at the same 100-row scale.
+  *
+  * The fixtures under src/test/resources/reference/testcases are
+  * RECONSTRUCTIONS, not the reference's own bytes: the schemas follow
+  * FIXTURES.md §2 (column names, types, keys, byte sizes), the queries
+  * follow the shapes of FIXTURES.md §4, and the value ranges are
+  * FIXTURES.md's (gender 2, qty 50, amount 2500) and the ones this spec
+  * pins (cid in [0, 200), firstname length 10). The other keys range
+  * over [0, 100), so every CARTDETAILS and BILL row finds its parent
+  * and each query returns rows (query10's sort sees 12 of them). */
 class ReferenceTestcasesSpec extends SparkSpec {
 
-  private val Dir = "/root/reference/testcases"
+  private val Dir = SparkSpec.resource("reference/testcases")
   private val N = 100L
 
   private lazy val tables: Map[String, DataFrame] =

@@ -12,13 +12,19 @@ import graft.SparkSpec
 import graft.sources.{RandomDb, TextTables}
 
 /** graft.tools.QueryMain — the reference's flagship CLI
-  * (QueryMain.java + demo/test.sh) driven end to end: the literal
-  * demo `.sql` files against RandomDB-generated demo tables, plan
+  * (QueryMain.java + demo/test.sh) driven end to end: the four demo
+  * `.sql` queries against RandomDB-generated demo tables, plan
   * display + confirm flow, single-file TSV results diffed against
-  * independently-built DataFrame algebra. */
+  * independently-built DataFrame algebra.
+  *
+  * The demo fixtures under src/test/resources/reference/demo are
+  * RECONSTRUCTIONS, not the reference's own bytes: the same commerce
+  * `.det` schemas as ReferenceTestcasesSpec's, and `join`, `distinct`,
+  * `groupby` and `orderby` queries written from the shapes in
+  * FIXTURES.md §4. */
 class QueryMainSpec extends SparkSpec {
 
-  private val Demo = "/root/reference/demo"
+  private val Demo = SparkSpec.resource("reference/demo")
   private val N = 100L
 
   private lazy val tables: Map[String, DataFrame] =
