@@ -19,7 +19,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * experiment (ReuseStageSpec flips `graft.stage.materialize`) never
   * sees a stale artifact. `graft.artifacts.reuse=false` restores
   * rebuild-per-consumer — kept so the saving stays measurable
-  * (graft.tools.TimeQuery A/Bs it).
+  * (`graft.tools.Profile` with either value; PLANS.md "Round-10:
+  * pair-graph artifacts" records the A/B).
   *
   * The outer map holds sessions WEAKLY (SparkSession has no custom
   * equals, so WeakHashMap keys by session identity): a stopped,

@@ -45,9 +45,11 @@ object Bench {
     // the near-dup pair graph once and every timed p02 run would measure
     // the cached read — a ~30x "win" that is really amortization. The
     // production-shape saving is measured honestly (and separately) by
-    // graft.tools.TimeQuery's reuse A/B, recorded in PLANS.md.
+    // `graft.tools.Profile` runs with graft.artifacts.reuse=true against
+    // false, recorded in PLANS.md ("Round-10: pair-graph artifacts").
     spark.conf.set("graft.artifacts.reuse", "false")
-    val names = headline.filter(SparkEntry.queries.contains)
+    // a headline name missing from SparkEntry fails in `timed`, reads -1
+    // and poisons the total like any failing query
     def run(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)
         .write.mode("overwrite").format("noop").save()
@@ -56,7 +58,7 @@ object Bench {
     // codegen part holds only because Session.local() sizes Spark's
     // generated-class cache above one pass's 231 classes; at Spark's
     // 100-entry default every pass recompiled all of them.
-    names.foreach { n =>
+    headline.foreach { n =>
       try run(n)
       catch { case e: Throwable =>
         System.err.println(s"[bench] warmup $n failed: ${e.getMessage}")
@@ -90,10 +92,10 @@ object Bench {
     def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val (passes, perPass) = (1 to 4).map { _ =>
       val (n0, j0) = (compiles, jitS)
-      val times = names.map(n => n -> timed(n)).toMap
+      val times = headline.map(n => n -> timed(n)).toMap
       (times, (compiles - n0, jitS - j0))
     }.unzip
-    val results = names.map { name =>
+    val results = headline.map { name =>
       val t = passes.map(_(name)).min
       name -> (if (t.isFinite) t else -1.0) // -1 marks a query that always failed
     }
@@ -101,7 +103,7 @@ object Bench {
       .mkString("{", ",", "}")
     // every pass's raw time per query (3-decimal), so a reader can see
     // the SPREAD behind each min. A failed rep prints as -1.
-    val samples = names.map { name =>
+    val samples = headline.map { name =>
       val vs = passes.map(_(name)).map(t =>
         if (t.isFinite) math.rint(t * 1000) / 1000 else -1.0)
       "\"" + name + "\":[" + vs.mkString(",") + "]"

@@ -8,6 +8,10 @@ object Verify {
     // optional 3rd arg: comma-separated query names (local iteration);
     // the driver passes two args and gets the full dump
     val only = args.lift(2).map(_.split(",").toSet)
+    // checked before the session starts: a typo would otherwise dump
+    // nothing and write an empty errors.json
+    val unknown = only.getOrElse(Set.empty).filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val spark = Session.local()
     // Opt-in cross-session artifact store for renewal runs: with
     // SPARK_GRAFT_ARTIFACTS_DIR set, the dedup pair graph / cluster
@@ -54,23 +58,11 @@ object Verify {
         errors(name) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val errJson = errors
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
     // exit 0 even with failures: the driver must still consume the partial
     // dump + errors.json (a nonzero exit could zero the whole round)

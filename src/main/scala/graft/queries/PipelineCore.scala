@@ -52,7 +52,7 @@ trait PipelineCore extends QueryModule {
     * not re-derive each monitor from the corpus. With artifact reuse on
     * (the gate/sweep default) the first consumer builds and checkpoints
     * the op's output; every later consumer joins it. Reuse-off (bench,
-    * probes, TimeQuery A/Bs) is untouched — the op rebuilds per call,
+    * `graft.tools.Profile` runs) is untouched — the op rebuilds per call,
     * exactly as before. `disk = true` for per-doc-row outputs (the p112
     * rule: never pin corpus-sized frames in unified memory). In-session
     * only — never the cross-session store, where persisting an op's

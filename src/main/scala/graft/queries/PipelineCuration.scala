@@ -698,7 +698,7 @@ trait PipelineCuration extends PipelineEvents {
     // many times (w, the rule gate, kept's join back, the census rows),
     // and column pruning specializes each bind's scan so no exchange is
     // reused — at sf10 the raw text was DECODED per bind, fused into
-    // the few row-group holder tasks (TaskSkewAudit: 24-task stages
+    // the few row-group holder tasks (Profile `stages`: 24-task stages
     // with 9–11 s maxima over 0.08 s medians, half the 22.5 s wall).
     // The doc_id-keyed spread splits decode from compute, and the
     // stagedDisk cut makes every bind read the same checkpoint blocks:

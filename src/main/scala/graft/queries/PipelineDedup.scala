@@ -315,7 +315,7 @@ trait PipelineDedup extends PipelineVectors {
       // count is EXPLICIT: a keyed repartition without one is
       // AQE-coalescible, and the pair bytes are tiny while the DP is
       // compute-bound — at sf0.1 AQE folded the whole verify into ONE
-      // task (JobTraceProbe: 1 task, 2.2 s of 3.2 s total; the same
+      // task (Profile `jobs`/`stages`: 1 task, 2.2 s of 3.2 s total; the same
       // byte-sized-parallelism class as the r16 sf10 finds).
       .repartition(s.sparkContext.defaultParallelism,
         col("doc_a"), col("doc_b"))
@@ -558,7 +558,7 @@ trait PipelineDedup extends PipelineVectors {
     // balanced: the pair side broadcasts (it is LSH-bounded), so the
     // token-set intersect verify inherits the DOCUMENTS scan's
     // parallelism — the raw single-file scan's split count (4 tasks ×
-    // 3.9 s medians at sf1, TaskSkewAudit). Guard-disabled at wide
+    // 3.9 s medians at sf1, Profile `stages`). Guard-disabled at wide
     // 100 TB inputs, same as every Tables.balanced site.
     val sets = Tables.balanced(s, d, "documents", Seq("doc_id"))
       .select(col("doc_id"), array_distinct(tokens(col("text"))).as("tset"))
@@ -679,7 +679,7 @@ trait PipelineDedup extends PipelineVectors {
     // Cell-size-adaptive salting (round 16): the cell-keyed self-join
     // generates |cell|² pairs inside the ONE task owning the cell's
     // hash partition — at sf10 the hottest k-means cell put 286 s on a
-    // single task while the stage median was 0.09 s (TaskSkewAudit),
+    // single task while the stage median was 0.09 s (Profile `stages`),
     // the p29 class of OUTPUT-side skew. [[saltedCellSelfJoin]] bounds
     // per-task pair work at ~SemSaltTarget·|cell|.
     val dropped = saltedCellSelfJoin(m,

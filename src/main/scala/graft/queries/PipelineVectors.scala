@@ -247,8 +247,9 @@ trait PipelineVectors extends PipelineText {
     // a couple of input splits at small corpus BYTES (60 MB at sf10),
     // and the per-vector×centroid cosine work — 1.2G products at sf10's
     // corpus-scaled K — would otherwise run on those few tasks while
-    // the rest of the cluster idles (the sf10 TaskSkewAudit straggler
-    // class: compute-bound map stages inherit byte-sized parallelism).
+    // the rest of the cluster idles (the sf10 straggler class in
+    // Profile's per-stage max/median: compute-bound map stages inherit
+    // byte-sized parallelism).
     // Width explicit (a keyed repartition without a count is
     // AQE-coalescible by BYTES, folding this FLOPs-bound stage to one
     // task at small rungs) and WORK-SCALED: N×K distance evaluations
@@ -421,7 +422,7 @@ trait PipelineVectors extends PipelineText {
     // itself, so the verify's parallelism is whichever side STREAMS —
     // and the planner is free to broadcast either. Off the raw
     // single-file scan the streamed side was the input SPLIT count
-    // (TaskSkewAudit at sf1: the whole verify on 4 tasks, 4×3.0 s
+    // (Profile `stages` at sf1: the whole verify on 4 tasks, 4×3.0 s
     // medians — the q19 under-split-scan class, not skew); balancing
     // the shared source makes the streamed side wide whichever way the
     // build choice goes. Tables.balanced self-disables on properly-
@@ -913,10 +914,10 @@ trait PipelineVectors extends PipelineText {
       // parallelism), and every consumer's compute-bound map stage —
       // the k-means assignment crossJoins above all — inherits the
       // staged frame's partitioning; at sf10 that put a 614M-distance
-      // assignment on ONE task (TaskSkewAudit: 224–286 s stragglers
+      // assignment on ONE task (Profile `stages`: 224–286 s stragglers
       // over 0.1 s stage medians) while 31 cores idled. Width explicit —
       // without a count AQE re-coalesces the exchange by BYTES (p42's
-      // whole quantized scan ran 1-task at sf0.1, JobTraceProbe) and
+      // whole quantized scan ran 1-task at sf0.1, Profile `jobs`) and
       // the consumers' work is FLOPs, not bytes — and WORK-SCALED to
       // the heaviest consumer (the N×kmeansK assignment), so small
       // rungs pay only the tasks their FLOPs warrant (r18; the r17
@@ -1087,7 +1088,7 @@ trait PipelineVectors extends PipelineText {
 
   /** Per-task work target for [[workWidth]], in vector-pair distance
     * evaluations (one 64-dim dot/L2 each). Sized from the measured cost
-    * of the class: the sf10 TaskSkewAudit's 614M-distance single-task
+    * of the class: the sf10 Profile `stages` 614M-distance single-task
     * straggler ran 224–286 s ⇒ ~400 ns per distance, so one task holds
     * ~0.2 s of compute — far above per-task scheduling cost, far below
     * straggler territory. */

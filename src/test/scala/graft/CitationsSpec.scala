@@ -16,8 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    code) must exist as a test source file, and
   *  - every "PLANS.md round N" citation must resolve to a round-N
   *    section header in PLANS.md, and
-  *  - every `FooBench`/`FooProbe` tool named in src/main, README.md or
-  *    the verify skill must exist as a main source file (PLANS.md is
+  *  - every `FooBench`/`FooProbe`/`FooAudit` tool and every
+  *    `graft.tools.Foo` named in src/main, README.md, the verify skill or
+  *    tools/run_graft.sh must exist as a main source file (PLANS.md is
   *    history and may name deleted tools).
   *
   * It also keeps the suite hermetic: no test source may name an
@@ -89,13 +90,16 @@ class CitationsSpec extends AnyFunSuite {
 
   test("every *Bench / *Probe tool cited in src/main and the docs exists") {
     val exist = sourceNames("src/main/scala")
-    val docs = Seq("README.md", ".claude/skills/verify/SKILL.md")
+    val docs = Seq("README.md", ".claude/skills/verify/SKILL.md",
+        "tools/run_graft.sh")
       .map(repoRoot.resolve).filter(Files.exists(_))
       .map(p => p -> Files.readString(p))
-    val citePattern = """\b[A-Z]\w*(?:Bench|Probe)\b""".r
+    val citePattern =
+      """\b([A-Z]\w*(?:Bench|Probe|Audit))\b|\bgraft\.tools\.(\w+)""".r
     val missing = for {
       (path, text) <- mainTexts ++ docs
-      name <- citePattern.findAllIn(text).toSeq.distinct
+      name <- citePattern.findAllMatchIn(text)
+        .map(m => Option(m.group(1)).getOrElse(m.group(2))).toSeq.distinct
       if !exist.contains(name)
     } yield s"$path cites $name"
     assert(missing.isEmpty,

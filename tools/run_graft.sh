@@ -4,7 +4,7 @@
 # sbt-launched Verify dump holds it). Mirrors build.sbt's forked-run
 # JVM flags (JDK17 add-opens for Spark 4, UTC, no UI, SPARK_DRIVER_MEM).
 #
-#   tools/run_graft.sh graft.tools.TaskSkewAudit tools/sf10 p02_minhash_neardup
+#   tools/run_graft.sh graft.tools.Profile tools/sf10 1 p02_minhash_neardup
 #
 # Requires a prior `sbt compile` (classes under target/scala-2.13/classes).
 set -euo pipefail
