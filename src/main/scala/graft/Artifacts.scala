@@ -6,13 +6,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-session registry of NAMED derived artifacts — expensive subtrees
   * that many operators consume (the MinHash near-dup pair graph, its
-  * connected-component labels). At production scale these are parquet
-  * side-tables written once per corpus build and read by every
-  * downstream job; within one engine session the same economics apply:
-  * build once, checkpoint, hand every consumer the same materialized
-  * frame instead of re-running the suite's most expensive stage per
-  * consumer (pre-round-10, p32/p41/p55/p82/p88 each re-built p02's
-  * MinHash+LSH pipeline from the raw corpus).
+  * connected-component labels, monitor-op outputs): build once,
+  * checkpoint, hand every consumer the same materialized frame instead
+  * of re-running the suite's most expensive stage per consumer
+  * (pre-round-10, p32/p41/p55/p82/p88 each re-built p02's MinHash+LSH
+  * pipeline from the raw corpus). Nothing outlives the session: a
+  * 228-query sweep runs in one session, where this registry already
+  * removes every duplicate build (PLANS.md "Cross-session artifact
+  * store deleted").
   *
   * Keyed on (session identity, dataset dir, staging mode, artifact
   * name) so a fresh session, a different corpus, or an A/B staging
@@ -41,21 +42,7 @@ object Artifacts {
     * per-staging-mode; with `graft.artifacts.reuse=false` every call
     * rebuilds. */
   def cached(s: SparkSession, dir: String, name: String)
-      (build: => DataFrame): DataFrame =
-    cachedImpl(s, dir, name, useStore = true)(build)
-
-  /** [[cached]] restricted to the IN-SESSION registry — never the
-    * cross-session parquet store, even with `graft.artifacts.dir` set.
-    * For monitor-op OUTPUTS the report family shares (r18): an op's
-    * RESULT persisted to the store keyed on the dataset dir would be
-    * cross-run result caching, not artifact reuse; in-session sharing
-    * is the same build-once-join-many economics without it. */
-  def cachedSessionOnly(s: SparkSession, dir: String, name: String)
-      (build: => DataFrame): DataFrame =
-    cachedImpl(s, dir, name, useStore = false)(build)
-
-  private def cachedImpl(s: SparkSession, dir: String, name: String,
-      useStore: Boolean)(build: => DataFrame): DataFrame = {
+      (build: => DataFrame): DataFrame = {
     if (s.conf.get("graft.artifacts.reuse", "true") != "true") return build
     val mode = s.conf.get("graft.stage.materialize", "local")
     val forSession = cache.synchronized {
@@ -72,240 +59,11 @@ object Artifacts {
     // queries sequentially, and a rare racing duplicate build is
     // correct, just wasted work — last writer wins.
     Option(forSession.get(key)).getOrElse {
-      val df = s.conf.get("graft.artifacts.dir", "") match {
-        case root if useStore && root.nonEmpty =>
-          loadOrWrite(s, root, dir, name)(build)
-        case _ => build
-      }
+      val df = build
       forSession.put(key, df)
       df
     }
   }
-
-  /** The cross-session store: with `graft.artifacts.dir` set, an
-    * artifact is a parquet side-table under
-    * `<root>/<md5(dataset dir)>/<name>` — built by the FIRST session
-    * that needs it, read (never rebuilt) by every later session. This
-    * is the literal production shape the registry's scaladoc
-    * describes: the corpus build writes the pair graph once, every
-    * downstream job reads the table. CONTRACT: the store trusts the
-    * dataset dir to be immutable (true for versioned corpus
-    * snapshots); tools that rewrite a dataset in place under a fixed
-    * path (ScaleProbe's work dir) must leave the store off, which is
-    * its default. A write is visible only when parquet's _SUCCESS
-    * marker landed, so a killed half-write rebuilds instead of
-    * reading garbage. */
-  private def loadOrWrite(s: SparkSession, root: String, dir: String,
-      name: String)(build: => DataFrame): DataFrame = {
-    val dsKey = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val path = s"$root/$dsKey/$name"
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val success = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = hPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(success)) s.read.parquet(path)
-    else {
-      // concurrent sessions may race this build: each writes to its
-      // own PRIVATE temp dir (no shared _temporary, no interleaved
-      // task commits) and publishes with one rename — never the final
-      // path directly, where two overwrite-mode jobs can interleave
-      // into a torn directory that still carries _SUCCESS. The
-      // publish itself is serialized through an atomic claim file
-      // (see [[publish]]): without it, two sessions could both pass
-      // an absence check, and on Hadoop filesystems — where rename
-      // onto an existing directory NESTS the source inside it — the
-      // loser's tmp dir would land inside the winner's published
-      // artifact, which still carries _SUCCESS, so every later
-      // session would silently read doubled rows. A session that
-      // cannot claim serves its own built frame; the published
-      // winner is equivalent, and the next session reads it.
-      val df = build
-      val tmp = new org.apache.hadoop.fs.Path(
-        s"$path.tmp-${java.util.UUID.randomUUID()}")
-      df.write.mode("overwrite").parquet(tmp.toString)
-      publish(fs, tmp, hPath): Unit
-      if (fs.exists(success)) s.read.parquet(path) else df
-    }
-  }
-
-  /** A crashed publisher's claim file may be broken (taken over) after
-    * this long — liveness for the store, far above any real publish. */
-  private val ClaimStaleMs = 15L * 60 * 1000
-
-  /** Atomically publish `tmp` as artifact dir `hPath`. Mutual
-    * exclusion comes from a sibling `<name>.claim` file taken with
-    * `FileSystem.createNewFile` (atomic create-if-absent on HDFS and
-    * local filesystems — the primitive distributed Hadoop jobs use
-    * for exactly this): only the claim holder may delete a torn final
-    * dir and rename into it, so the nesting race (two publishers both
-    * passing an absence check, the loser's rename nesting its tmp
-    * INSIDE the winner's `_SUCCESS`-carrying dir) cannot happen. A
-    * claim older than [[ClaimStaleMs]] is broken once — a crashed
-    * publisher must not wedge the store forever; sessions that cannot
-    * claim discard `tmp` and serve their own built frame. Under the
-    * claim, `_SUCCESS` is re-checked immediately before any delete —
-    * a torn-write cleanup can no longer race a concurrent good
-    * publish — and after the rename the final dir is verified to
-    * contain no nested `*.tmp-*` entry (repairing by deleting any
-    * found: belt-and-braces against legacy unclaimed writers).
-    * `onClaimHeld` is a test seam run while the claim is held, before
-    * the publish decision — race-injection specs schedule a competing
-    * publisher inside it. Returns whether THIS caller published. */
-  private[graft] def publish(fs: org.apache.hadoop.fs.FileSystem,
-      tmp: org.apache.hadoop.fs.Path, hPath: org.apache.hadoop.fs.Path,
-      onClaimHeld: () => Unit = () => ()): Boolean = {
-    val success = new org.apache.hadoop.fs.Path(hPath, "_SUCCESS")
-    val claim = new org.apache.hadoop.fs.Path(
-      hPath.getParent, hPath.getName + ".claim")
-    // Ownership is VERIFIABLE, not just positional: the claim file
-    // carries its owner's UUID, re-read immediately before the
-    // destructive step and before the release. This closes the
-    // residual three-party race (T2 observes a stale claim; T1
-    // completes a full takeover in the gap; T2's tombstone rename
-    // steals T1's FRESH claim; a third session claims the vacant path
-    // before T2's hand-back) — positionally both T1 and T3 "hold" a
-    // claim, but only T3's UUID is in the file, so T1's read-back
-    // fails and it stands down instead of publishing concurrently.
-    // A transiently unreadable/vacant claim (mid-steal-and-handback)
-    // reads as NOT owned — the conservative direction: the session
-    // serves its own built frame and the claim, if leaked, goes
-    // stale and is broken like any crashed publisher's.
-    val owner = java.util.UUID.randomUUID().toString
-    def tryClaim(): Boolean =
-      try {
-        fs.mkdirs(hPath.getParent)
-        // ONE atomic step: create-if-absent (overwrite=false throws if
-        // the claim exists — the same atomicity createNewFile gave)
-        // WITH the owner UUID written through the same stream. The old
-        // two-step (createNewFile, then a second overwrite-create for
-        // the UUID) could crash between the steps and leak an EMPTY
-        // unowned claim that blocked every publisher until
-        // ClaimStaleMs. If stamping still fails (write/close throws),
-        // we KNOW the claim is ours — created exclusively just now —
-        // so delete it before standing down instead of leaking it.
-        val out = fs.create(claim, false)
-        try { out.write(owner.getBytes("UTF-8")); out.close() }
-        catch {
-          case e: java.io.IOException =>
-            try out.close() catch { case _: java.io.IOException => () }
-            try fs.delete(claim, false): Unit
-            catch { case _: java.io.IOException => () }
-            throw e
-        }
-        true
-      } catch { case _: java.io.IOException => false }
-    def stillOwned(): Boolean = try {
-      val want = owner.getBytes("UTF-8")
-      val in = fs.open(claim)
-      try {
-        // read-to-EOF loop, not a single read(): a lone read() may
-        // legally short-read on some Hadoop FileSystems, making a
-        // legitimate owner stand down on a partial UUID. One extra
-        // byte of capacity distinguishes "exactly our UUID" from "our
-        // UUID as a prefix of something longer".
-        val buf = new Array[Byte](want.length + 1)
-        var n = 0
-        var r = 0
-        while (n < buf.length &&
-            { r = in.read(buf, n, buf.length - n); r > 0 }) n += r
-        n == want.length &&
-          java.util.Arrays.equals(java.util.Arrays.copyOf(buf, n), want)
-      } finally in.close()
-    } catch { case _: java.io.IOException => false }
-    val owned = tryClaim() ||
-      takeoverStaleClaim(fs, claim, tryClaim)
-    val won = owned && {
-      try {
-        onClaimHeld()
-        if (!stillOwned()) false // claim stolen: lost ownership
-        else if (fs.exists(success)) false // a racer published: done
-        else {
-          // marker-less final dir = torn write; safe to clear under
-          // the claim (no one else can be mid-publish)
-          if (fs.exists(hPath)) fs.delete(hPath, true): Unit
-          val renamed = fs.rename(tmp, hPath)
-          if (renamed) fs.listStatus(hPath)
-            .filter(_.getPath.getName.contains(".tmp-"))
-            .foreach(st => fs.delete(st.getPath, true): Unit)
-          renamed
-        }
-      } finally {
-        // release only OUR claim — deleting blindly would destroy a
-        // successor's claim after a theft
-        if (stillOwned()) fs.delete(claim, false): Unit
-      }
-    }
-    if (!won) fs.delete(tmp, true): Unit
-    won
-  }
-
-  /** Break a stale claim and retry `tryClaim`. NOT delete-then-create:
-    * two takers can interleave so the second DELETES the first's fresh
-    * claim and both end up publishing — the exact race this file
-    * exists to prevent. Instead the claim is RENAMED to a taker-unique
-    * tombstone (rename of one source path succeeds for exactly one
-    * taker), and because a concurrent taker may have completed its
-    * whole takeover in the gap between this taker's staleness
-    * observation and its rename, the captured tombstone's mtime
-    * (rename preserves it) is re-checked: a FRESH capture means a
-    * live claim was stolen, and it is handed back by renaming the
-    * tombstone to the claim path (or dropped if a newer claim already
-    * occupies it — that claim excludes this taker either way). Only a
-    * still-stale capture is discarded, after which `tryClaim` re-runs
-    * — `createNewFile` stays the sole arbiter of ownership, so a
-    * third session that claimed in the gap still wins cleanly.
-    * `onObservedStale` is a test seam between the staleness
-    * observation and the rename — race-injection specs complete a
-    * competing takeover inside it. */
-  private[graft] def takeoverStaleClaim(
-      fs: org.apache.hadoop.fs.FileSystem,
-      claim: org.apache.hadoop.fs.Path, tryClaim: () => Boolean,
-      onObservedStale: () => Unit = () => ()): Boolean = {
-    def staleAt(p: org.apache.hadoop.fs.Path): Boolean = try {
-      System.currentTimeMillis() -
-        fs.getFileStatus(p).getModificationTime > ClaimStaleMs
-    } catch { case _: java.io.IOException => false }
-    staleAt(claim) && {
-      onObservedStale()
-      val tomb = new org.apache.hadoop.fs.Path(claim.getParent,
-        claim.getName + s".tomb-${java.util.UUID.randomUUID()}")
-      val broke = try fs.rename(claim, tomb)
-        catch { case _: java.io.IOException => false }
-      broke && {
-        if (staleAt(tomb)) { fs.delete(tomb, false): Unit; tryClaim() }
-        else {
-          try { if (!fs.rename(tomb, claim)) fs.delete(tomb, false): Unit }
-          catch { case _: java.io.IOException =>
-            fs.delete(tomb, false): Unit }
-          false
-        }
-      }
-    }
-  }
-
-  /** Stage a builder's FINAL frame only when the artifact will live in
-    * memory: with the parquet store on, the write + read-back IS the
-    * materialization, and a localCheckpoint first would run the
-    * expensive job twice (once into executor blocks, once into the
-    * store). Builders' INTERNAL staging of reused subtrees is
-    * unaffected — this is only for the outermost cut. */
-  def stage(s: SparkSession, df: DataFrame): DataFrame =
-    if (s.conf.get("graft.artifacts.dir", "").nonEmpty) df
-    else Stage.materialize(df)
-
-  /** [[stage]] applied only when the artifact registry will actually
-    * share the frame across consumers (`graft.artifacts.reuse=true`,
-    * the default). With reuse off, every call rebuilds for exactly ONE
-    * consumer, so the final checkpoint write + read-back is pure
-    * overhead — measured 1.15 → 1.04 s on p02 at sf0.1 (min of 6
-    * same-session; PLANS.md, "Decided A/B timers deleted"). Only for
-    * builds whose consumer binds the returned frame ONCE; builders
-    * consumed from multiple join sides of a single plan (ivfAssigned,
-    * the kmeans assignment) keep [[stage]] so the no-reuse path cannot
-    * duplicate their subtree. */
-  def stageIfShared(s: SparkSession, df: DataFrame): DataFrame =
-    if (s.conf.get("graft.artifacts.reuse", "true") == "true") stage(s, df)
-    else df
 
   /** Session-scoped memo for small derived SCALARS — corpus row
     * counts feeding corpus-scaled sizing (codebook K, sample

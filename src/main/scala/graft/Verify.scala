@@ -13,15 +13,6 @@ object Verify {
     val unknown = only.getOrElse(Set.empty).filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val spark = Session.local()
-    // Opt-in cross-session artifact store for renewal runs: with
-    // SPARK_GRAFT_ARTIFACTS_DIR set, the dedup pair graph / cluster
-    // labels / codebooks build ONCE per (store, dataset) and every
-    // later full-gate run reads them back instead of rebuilding —
-    // the production corpus-build shape. Results are bit-identical
-    // (ArtifactStoreDualSessionSpec pins row identity); the driver
-    // never sets the env, so gate runs stay standalone by default.
-    sys.env.get("SPARK_GRAFT_ARTIFACTS_DIR").filter(_.nonEmpty)
-      .foreach(d => spark.conf.set("graft.artifacts.dir", d))
     // catalog build at session setup: CREATE + ANALYZE all tables is
     // per-(session, directory) metadata work — the production shape runs
     // it at corpus publication, not inside whichever SQL query happens

@@ -52,15 +52,14 @@ trait PipelineCore extends QueryModule {
     * not re-derive each monitor from the corpus. With artifact reuse on
     * (the gate/sweep default) the first consumer builds and checkpoints
     * the op's output; every later consumer joins it. Reuse-off (bench,
-    * `graft.tools.Profile` runs) is untouched — the op rebuilds per call,
-    * exactly as before. `disk = true` for per-doc-row outputs (the p112
-    * rule: never pin corpus-sized frames in unified memory). In-session
-    * only — never the cross-session store, where persisting an op's
-    * RESULT keyed on the dataset would be result caching. */
+    * `graft.tools.Profile` runs) is untouched — the op rebuilds per call
+    * with no checkpoint cut (hence the reuse check ahead of the
+    * registry's own). `disk = true` for per-doc-row outputs (the p112
+    * rule: never pin corpus-sized frames in unified memory). */
   private[queries] def opArtifact(name: String, disk: Boolean = false)
       (q: Q): Q = (s, d) =>
     if (s.conf.get("graft.artifacts.reuse", "true") != "true") q(s, d)
-    else graft.Artifacts.cachedSessionOnly(s, d, name) {
+    else graft.Artifacts.cached(s, d, name) {
       if (disk) q(s, d).stagedDisk else q(s, d).staged
     }
 

@@ -116,32 +116,24 @@ trait PipelineDedup extends PipelineVectors {
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bkey")
 
 
-  private[queries] def p02MinhashNearDup: Q = (s, d) =>
-    nearDupPairs(s, d, bindsOnce = true)
+  private[queries] def p02MinhashNearDup: Q = (s, d) => nearDupPairs(s, d)
 
 
   /** The near-dup pair graph (doc_a, doc_b, jaccard) as a session-cached
     * artifact: built once per (session, dataset), checkpointed, and
     * consumed by every pair-graph operator (p02 itself, p32 clustering,
-    * p55 hops, p88 PageRank — and through p32, p41/p82). This is the
-    * production shape — at 100 TB the signature/pair tables are persisted
-    * parquet side-tables written by the corpus build and read by all
-    * downstream curation jobs, not recomputed per query.
+    * p55 hops, p88 PageRank — and through p32, p41/p82), not
+    * recomputed per query.
     *
-    * `bindsOnce`: with artifact reuse OFF (bench/probes rebuild per
-    * consumer) the final checkpoint is pure overhead for a consumer
-    * that binds the frame exactly once (p02's direct dump — measured
-    * 1.15 → 1.04 s at sf0.1), but most consumers union the pairs with
-    * their flipped self, binding the frame on BOTH sides of one plan —
-    * dropping the cut there evaluates the verify broadcast-join subtree
-    * twice (r17 ADVICE). Default keeps the cut; only a single-bind
-    * caller may pass true. With reuse ON both paths stage identically. */
-  private[graft] def nearDupPairs(s: SparkSession, d: String,
-      bindsOnce: Boolean = false): DataFrame =
+    * The final cut stays with reuse off too: most consumers union the
+    * pairs with their flipped self, binding the frame on both sides of
+    * one plan, and without the cut the verify broadcast-join subtree
+    * runs twice (r17 ADVICE). Skipping it for p02's single bind alone
+    * was inside noise on a 4-vCPU host (PLANS.md "Cross-session
+    * artifact store deleted"). */
+  private[graft] def nearDupPairs(s: SparkSession, d: String): DataFrame =
     graft.Artifacts.cached(s, d, "neardup_pairs") {
-      val built = buildNearDupPairs(s, d)
-      if (bindsOnce) graft.Artifacts.stageIfShared(s, built)
-      else graft.Artifacts.stage(s, built)
+      buildNearDupPairs(s, d).staged
     }
 
 
@@ -357,7 +349,7 @@ trait PipelineDedup extends PipelineVectors {
     * and the label propagation once each, not once per consumer. */
   private[graft] def dupClusterLabels(s: SparkSession, d: String): DataFrame =
     graft.Artifacts.cached(s, d, "dup_cluster_labels") {
-      graft.Artifacts.stage(s, buildDupClusters(s, d))
+      buildDupClusters(s, d).staged
     }
 
 

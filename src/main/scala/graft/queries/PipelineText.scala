@@ -558,17 +558,13 @@ trait PipelineText extends PipelineCore {
 
 
   /** The corpus's BM25 postings index as a named ARTIFACT — the
-    * production posture [[bm25Postings]]'s scaladoc describes, made
-    * literal: at 100 TB the impact-ordered index is a persisted
-    * side-table the corpus build writes once and every retrieval job
-    * reads, never rebuilt per query. With `graft.artifacts.dir` set it
-    * lives in the parquet store (first session builds, later sessions
-    * warm-serve: ArtifactStoreDualSessionSpec); within one session it
-    * is built once and checkpointed for all consumers (p74, p129,
-    * p135 — previously each re-ran the corpus-sized tf chain). */
+    * posture [[bm25Postings]]'s scaladoc describes: the impact-ordered
+    * index is built once per session and checkpointed for all consumers
+    * (p74, p129, p135 — previously each re-ran the corpus-sized tf
+    * chain), never rebuilt per query. */
   private[graft] def bm25PostingsArt(s: SparkSession, d: String): DataFrame =
     graft.Artifacts.cached(s, d, "bm25_postings") {
-      graft.Artifacts.stage(s, bm25Postings(docsBalanced(s, d)))
+      bm25Postings(docsBalanced(s, d)).staged
     }
 
 

@@ -221,16 +221,12 @@ trait PipelineVectors extends PipelineText {
     * reference, and the p135 serving op): every vector keyed to its
     * nearest codebook centroid via a broadcast crossJoin + per-vector
     * argmax — one map-side pass, one keyed shuffle for the argmax
-    * window. Held as a named ARTIFACT: at 100 TB this (vec_id, cell)
-    * assignment IS the IVF index — a persisted side-table the corpus
-    * build writes once and every retrieval job reads — so with
-    * `graft.artifacts.dir` set it lives in the parquet store (built by
-    * the first session, warm-served by all later ones:
-    * ArtifactStoreDualSessionSpec), and within a session it is built
-    * once and checkpointed for all consumers. */
+    * window. Held as a named ARTIFACT — this (vec_id, cell)
+    * assignment IS the IVF index — so within a session it is built once
+    * and checkpointed for all consumers. */
   private[graft] def ivfAssigned(s: SparkSession, d: String): DataFrame =
     graft.Artifacts.cached(s, d, "ivf_assigned") {
-      graft.Artifacts.stage(s, buildIvfAssigned(s, d))
+      buildIvfAssigned(s, d).staged
     }
 
 
@@ -1190,7 +1186,7 @@ trait PipelineVectors extends PipelineText {
   private[queries] def kmeansState(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val qq = quantizedVectors(s, d).select(col("vec_id"), col("qv"))
     val a2 = graft.Artifacts.cached(s, d, "kmeans_assign") {
-      graft.Artifacts.stage(s, kmeansAssign(qq, kmeansCentroids(s, d)))
+      kmeansAssign(qq, kmeansCentroids(s, d)).staged
     }
     (qq, a2)
   }

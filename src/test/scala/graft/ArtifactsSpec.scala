@@ -1,14 +1,14 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.queries.Pipeline
 
 /** The session artifact registry (graft.Artifacts): the near-dup pair
-  * graph and its cluster labels are built ONCE per (session, dataset)
-  * and shared by every consumer — the round-10 production shape, where
-  * signature/pair tables are persisted side-tables, not per-query
-  * rebuilds. */
+  * graph, its cluster labels and the monitor-op outputs are built ONCE
+  * per (session, dataset, staging mode) and shared by every consumer,
+  * not rebuilt per query. */
 class ArtifactsSpec extends SparkSpec {
 
   test("nearDupPairs is the same materialized frame on every request") {
@@ -73,44 +73,36 @@ class ArtifactsSpec extends SparkSpec {
       "after invalidate the scalar must be recomputed")
   }
 
-  test("graft.artifacts.dir persists artifacts across sessions") {
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-artifact-store").toString
-    spark.conf.set("graft.artifacts.dir", store)
-    try {
-      Artifacts.invalidate(spark)
-      val rows = Pipeline.nearDupPairs(spark, sf)
-        .orderBy("doc_a", "doc_b").collect().toSeq
-      // the store now holds the parquet side-table with its marker
-      val stored = new java.io.File(store).listFiles()
-      assert(stored != null && stored.length == 1, "one dataset key")
-      val table = new java.io.File(stored(0), "neardup_pairs")
-      assert(new java.io.File(table, "_SUCCESS").exists(),
-        s"no _SUCCESS under $table")
-      // a "new session" (registry invalidated) READS the side-table,
-      // not the corpus — proven by tampering: truncate the stored
-      // table to its first row and the next request must see ONE row
-      val one = spark.read.parquet(table.toString).limit(1)
-      val tmp = new java.io.File(stored(0), "tamper")
-      one.write.parquet(tmp.toString)
-      spark.read.parquet(tmp.toString).write
-        .mode("overwrite").parquet(table.toString)
-      Artifacts.invalidate(spark)
-      val again = Pipeline.nearDupPairs(spark, sf).collect().toSeq
-      assert(again.length == 1,
-        "a fresh session must read the (tampered) store, not rebuild")
-      // and the marker is the visibility gate: drop it and the
-      // artifact must REBUILD (half-write protection)
-      assert(new java.io.File(table, "_SUCCESS").delete())
-      Artifacts.invalidate(spark)
-      val rebuilt = Pipeline.nearDupPairs(spark, sf)
-        .orderBy("doc_a", "doc_b").collect().toSeq
-      assert(rebuilt == rows)
-      assert(new java.io.File(table, "_SUCCESS").exists(),
-        "rebuild must rewrite the side-table with its marker")
-    } finally {
-      spark.conf.unset("graft.artifacts.dir")
-      Artifacts.invalidate(spark)
-    }
+  test("the registry keys on staging mode: each mode shares its own " +
+      "frame, and both hold the same rows") {
+    def rows(df: DataFrame) = df.orderBy("doc_a", "doc_b").collect().toSeq
+    val local = Pipeline.nearDupPairs(spark, sf)
+    assert(local eq Pipeline.nearDupPairs(spark, sf))
+    spark.conf.set("graft.stage.materialize", "none")
+    val (none, noneRows) =
+      try {
+        val n = Pipeline.nearDupPairs(spark, sf)
+        assert(n eq Pipeline.nearDupPairs(spark, sf),
+          "a repeat request in the same mode must return the cached frame")
+        (n, rows(n))
+      } finally spark.conf.unset("graft.stage.materialize")
+    assert(!(none eq local), "a staging-mode flip must not see the " +
+      "other mode's frame")
+    assert(Pipeline.nearDupPairs(spark, sf) eq local,
+      "the default mode's entry survives the flip")
+    assert(rows(local) == noneRows)
+  }
+
+  test("opArtifact shares a monitor op's output only with reuse on") {
+    val p84 = SparkEntry.queries("p84_hourly_anomaly")
+    val shared = p84(spark, sf)
+    assert(shared eq p84(spark, sf), "reuse on must hand every consumer " +
+      "the one built output")
+    spark.conf.set("graft.artifacts.reuse", "false")
+    val (a, b) =
+      try (p84(spark, sf), p84(spark, sf))
+      finally spark.conf.unset("graft.artifacts.reuse")
+    assert(!(a eq b), "reuse=false must rebuild the op per call")
+    assert(a.collect().toSet == shared.collect().toSet)
   }
 }

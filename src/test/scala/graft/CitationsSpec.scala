@@ -19,7 +19,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - every `FooBench`/`FooProbe`/`FooAudit` tool and every
   *    `graft.tools.Foo` named in src/main, README.md, the verify skill or
   *    tools/run_graft.sh must exist as a main source file (PLANS.md is
-  *    history and may name deleted tools).
+  *    history and may name deleted tools), and
+  *  - every backticked `graft.<seg>.<key>` conf key cited in src/main,
+  *    README.md or the verify skill must be read somewhere in src/main
+  *    as a string literal — a doc must not advertise a knob the code
+  *    no longer has.
   *
   * It also keeps the suite hermetic: no test source may name an
   * absolute path outside the checkout and the shared test-data root.
@@ -51,6 +55,10 @@ class CitationsSpec extends AnyFunSuite {
 
   private lazy val mainTexts: Seq[(Path, String)] =
     scalaFiles(repoRoot.resolve("src/main/scala"))
+      .map(p => p -> Files.readString(p))
+
+  private def docTexts(rels: String*): Seq[(Path, String)] =
+    rels.map(repoRoot.resolve).filter(Files.exists(_))
       .map(p => p -> Files.readString(p))
 
   test("every *Spec cited in src/main exists in the test tree") {
@@ -90,10 +98,8 @@ class CitationsSpec extends AnyFunSuite {
 
   test("every *Bench / *Probe tool cited in src/main and the docs exists") {
     val exist = sourceNames("src/main/scala")
-    val docs = Seq("README.md", ".claude/skills/verify/SKILL.md",
-        "tools/run_graft.sh")
-      .map(repoRoot.resolve).filter(Files.exists(_))
-      .map(p => p -> Files.readString(p))
+    val docs = docTexts("README.md", ".claude/skills/verify/SKILL.md",
+      "tools/run_graft.sh")
     val citePattern =
       """\b([A-Z]\w*(?:Bench|Probe|Audit))\b|\bgraft\.tools\.(\w+)""".r
     val missing = for {
@@ -105,6 +111,31 @@ class CitationsSpec extends AnyFunSuite {
     assert(missing.isEmpty,
       s"\nphantom tool citations (restore the tool or fix the text):\n  " +
         missing.mkString("\n  "))
+  }
+
+  test("every graft.* conf key cited in src/main and the docs is read " +
+      "in src/main") {
+    // `graft.tools.Profile`, `graft.functions.Portable.h60`: classes in a
+    // package, not conf keys — the tool test above covers those
+    val packages: Set[String] = {
+      val stream = Files.list(repoRoot.resolve("src/main/scala/graft"))
+      try stream.iterator().asScala.filter(Files.isDirectory(_))
+        .map(_.getFileName.toString).toSet
+      finally stream.close()
+    }
+    val code = mainTexts.map(_._2).mkString("\n")
+    val citePattern = """`graft\.(\w+)\.([\w.]*\w)""".r
+    val dead = for {
+      (path, text) <- mainTexts ++
+        docTexts("README.md", ".claude/skills/verify/SKILL.md")
+      m <- citePattern.findAllMatchIn(text).toSeq
+      if !packages.contains(m.group(1))
+      key = s"graft.${m.group(1)}.${m.group(2)}"
+      if !code.contains("\"" + key + "\"")
+    } yield s"$path cites $key"
+    assert(dead.isEmpty,
+      s"\ndead conf keys (read the key in src/main or fix the text):\n  " +
+        dead.distinct.mkString("\n  "))
   }
 
   test("no test source names an absolute path outside the repo and test data") {

@@ -127,8 +127,7 @@ class PlanShapeSpec extends SparkSpec {
       // shared ivfAssigned frame is referenced from two join sides, so
       // with artifacts disabled its subtree inlines twice) and the
       // BM25 postings build's two 1-row `stats` scalar broadcasts
-      // (inlined for the same reason — with the store on, the postings
-      // subtree is a parquet scan instead). A 5th would mean a new
+      // (inlined for the same reason). A 5th would mean a new
       // unbounded cross crept into the serving path.
       assert("BroadcastNestedLoopJoin".r.findAllIn(p).size <= 4,
         s"p135 grew an extra nested loop beyond the codebook assigns " +
