@@ -6,9 +6,9 @@ import org.apache.spark.sql.SparkSession
   * tests run identical configs.
   *
   * - the local width and shuffle.partitions both come from
-  *   `SPARK_GRAFT_CPUS` (32 when unset) instead of Spark's 200 — at
-  *   cluster scale shuffle.partitions is the knob sized to data volume,
-  *   and AQE coalescing handles the small-partition end;
+  *   `SPARK_GRAFT_CPUS` (else the host's processor count) instead of
+  *   Spark's 200 — at cluster scale shuffle.partitions is the knob sized
+  *   to data volume, and AQE coalescing handles the small-partition end;
   * - AQE on: runtime re-planning (join strategy demotion/promotion, skew
   *   splitting, partition coalescing) is the scale story for every query
   *   in this repo;
@@ -32,7 +32,8 @@ import org.apache.spark.sql.SparkSession
   */
 object Session {
   def local(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .withExtensions(new graft.functions.GraftExtensions)

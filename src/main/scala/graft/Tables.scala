@@ -144,25 +144,6 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame  = apply(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")
 
-  /** Register every table so `spark.sql` / the mini-SQL front end can
-    * resolve bare table names — and so the cost-based optimizer has
-    * statistics to reorder joins with (the Catalyst counterpart of the
-    * reference's `.stat` files, `RandomOptimizer.java:126-216`).
-    *
-    * Nine tables become EXTERNAL catalog tables over the parquet location,
-    * followed by `ANALYZE TABLE … COMPUTE STATISTICS FOR ALL COLUMNS`:
-    * row counts + per-column NDV/min/max live in the session catalog, which
-    * is what `CostBasedJoinReorder` needs on every join input (a temp view
-    * over a bare parquet read exposes only sizeInBytes, and CBO stays
-    * inert). The ANALYZE scan is a one-time cost per (session, directory) —
-    * [[graft.sql.SparkSqlRunner]] caches registration.
-    *
-    * `events` needs a normalization expression a catalog table cannot
-    * carry (normalizeTs), so it is registered as catalog table `events_raw`
-    * (ANALYZE'd like the rest) plus temp view `events` projecting the
-    * normalized `ts` over it — Catalyst's ProjectEstimation propagates the
-    * raw table's row count and per-column stats through the aliasing
-    * projection, so CBO sees events joins like any other table's. */
   /** Column types ANALYZE … FOR COLUMNS accepts (AnalyzeColumnCommand's
     * own support set); everything else only contributes to the row count.
     * TimestampNTZ is deliberately EXCLUDED even though ANALYZE accepts it:
@@ -182,8 +163,26 @@ object Tables {
     }
   }
 
-  /** Register one table: external catalog entry + column statistics.
-    * `events` additionally gets a normalized-ts temp view (see above). */
+  /** Register one table so `spark.sql` / the mini-SQL front end can
+    * resolve its bare name, with the statistics the cost-based
+    * optimizer reorders joins with (the Catalyst counterpart of the
+    * reference's `.stat` files, `RandomOptimizer.java:126-216`).
+    *
+    * The table becomes an EXTERNAL catalog table over the parquet
+    * location, followed by `ANALYZE TABLE … COMPUTE STATISTICS FOR
+    * COLUMNS` over its `analyzable` columns: row counts + per-column
+    * NDV/min/max live in the session catalog, which is what
+    * `CostBasedJoinReorder` needs on every join input (a temp view over
+    * a bare parquet read exposes only sizeInBytes, and CBO stays inert).
+    * The ANALYZE scan is a one-time cost per (session, directory, table)
+    * — [[graft.sql.SparkSqlRunner]] caches registration.
+    *
+    * `events` needs a normalization expression a catalog table cannot
+    * carry (normalizeTs), so it is registered as catalog table `events_raw`
+    * (ANALYZE'd like the rest) plus temp view `events` projecting the
+    * normalized `ts` over it — Catalyst's ProjectEstimation propagates the
+    * raw table's row count and per-column stats through the aliasing
+    * projection, so CBO sees events joins like any other table's. */
   private def registerOne(spark: SparkSession, sfDir: String, n: String): Unit = {
     val table = if (n == "events") "events_raw" else n
     // a leftover temp view of the same name would shadow the catalog

@@ -16,9 +16,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   *
   * Why not `crossJoin(broadcast(oneRowArrayFrame))`: the joined OUTPUT
   * row owns its bytes, so UnsafeWriter memcpies the entire array into
-  * every document row — ~8 MB × rows at a 10⁶-gram eval suite, which
-  * DoorScanBench measured as the scanner's actual bottleneck (the
-  * probe itself is O(log n)). And why not `lit(array)`: a Literal
+  * every document row — ~8 MB × rows at a 10⁶-gram eval suite,
+  * measured as the scanner's actual bottleneck (PLANS.md round 14,
+  * item 5; the probe is O(log n)). And why not `lit(array)`: a Literal
   * rides the serialized task binary, re-shipped with every task of
   * every stage — a broadcast ships once per executor. Here the
   * expression carries only the broadcast HANDLE (bytes move through

@@ -19,7 +19,7 @@ import org.apache.spark.sql.types._
   * `crossJoin(broadcast(oneRowStructArrayFrame)) + aggregate(...)`:
   * (1) the join row owned the eval matrix, so UnsafeWriter memcpied
   * ~(|eval|·(dim·4+16)) bytes into EVERY probe row — the
-  * BroadcastLongArray finding (SemScanBench measured it); (2) the
+  * BroadcastLongArray finding (measured in PLANS.md round 14); (2) the
   * `aggregate` HOF interprets its lambda per eval vector, where this
   * eval is one compiled loop over primitive arrays. The matrix ships
   * once per executor through the broadcast.

@@ -9,7 +9,7 @@ import graft.Tables
   * directory are registered (CREATE + ANALYZE, see `Tables.registerOne`)
   * lazily, PER REFERENCED TABLE: the r17 shape registered all ten tables
   * on a session's first statement, which billed the whole catalog build —
-  * ten CREATEs plus ten ANALYZE ... FOR ALL COLUMNS scans — to whichever
+  * ten CREATEs plus ten ANALYZE ... FOR COLUMNS scans — to whichever
   * query happened to run first (the sf0.1 sweep's s24 absorbed 6+ s of it,
   * VERDICT r17 §next-round #4). Now each statement pays only for the
   * tables it names, once per (session, directory, table).

@@ -267,10 +267,9 @@ object Streams {
     * banks on. The previous crossJoin(broadcast(one-row-set-frame)) +
     * array_intersect shape paid |eval| per row TWICE — the joined row
     * memcpied the whole gram set AND array_intersect rebuilt a hash
-    * set of it per document (SemScanBench: 26.3 s for 100k docs at
-    * 1e5 grams; a 1e6-gram pass did not finish in 16 minutes). Now
-    * the per-row work is |gs|·log|eval| (measured after: see
-    * PLANS.md round-14). */
+    * set of it per document (26.3 s for 100k docs at 1e5 grams; a
+    * 1e6-gram pass did not finish in 16 minutes). Now the per-row work
+    * is |gs|·log|eval| (before/after table: PLANS.md round 14). */
   def contaminationMatches(docs: DataFrame, evalGrams: DataFrame): DataFrame = {
     import graft.functions.Portable
     import graft.functions.SortedContains.sortedContains
@@ -303,8 +302,8 @@ object Streams {
     * eval matrix (ids + norms + row-major floats): the previous
     * crossJoin(one-row-struct-array) + `aggregate` HOF paid |eval| per
     * row twice over — the joined row memcpied the matrix AND the
-    * lambda interpreted per eval vector (SemScanBench: 1k rows/s at
-    * just 1e4 eval vectors). Arithmetic is bit-identical (the
+    * lambda interpreted per eval vector (1k rows/s at just 1e4 eval
+    * vectors, PLANS.md round 14). Arithmetic is bit-identical (the
     * expression replicates vdot + cos6 + the fold's total order —
     * sim DESC, eval_id ASC — including every NULL case), same
     * τ = 0.40. STATELESS — Append-legal, no watermark, no shuffle.
@@ -377,9 +376,9 @@ object Streams {
     * [[graft.functions.BroadcastLongArray]], NOT as a
     * crossJoin(broadcast(oneRowArrayFrame)): the joined row owns its
     * bytes, so that shape memcpies the whole array into EVERY document
-    * row — ~8 MB per row at a 10⁶-gram suite, which DoorScanBench
-    * measured as the real bottleneck at deployment scale (the probe
-    * itself was never the problem). The one-time `.head()` that
+    * row — ~8 MB per row at a 10⁶-gram suite, measured as the real
+    * bottleneck at deployment scale (PLANS.md round 14, item 5; the
+    * probe itself was never the problem). The one-time `.head()` that
     * materializes the static side at query BUILD is the same driver
     * materialization every stream-static broadcast join performs — it
     * is not a per-batch or per-row driver loop (and it replaces the
@@ -396,7 +395,7 @@ object Streams {
       distinct = false)
     // the fold ALSO counts its elements (cnt), so `hits` — the
     // expensive h60-probe filter — is referenced exactly once. A
-    // separate size(hits) measured NEUTRAL on DoorScanBench (Spark's
+    // separate size(hits) measured NEUTRAL in round 14 (Spark's
     // runtime subexpression elimination already dedupes the collapsed
     // projection's twin reference); the single reference is kept so
     // the scan's cost never silently doubles if that optimization
@@ -780,7 +779,7 @@ object Streams {
         // broadcasts to the stream, and the codebook no longer rides
         // every probe row (the old one-row-array crossJoin memcpied
         // K centroid structs per probe and interpreted the argmax
-        // lambda per centroid — the SemScanBench copy trap). The
+        // lambda per centroid — PLANS.md round 14's copy trap). The
         // one-time driver materialization of the codebook at query
         // build is the stream-static broadcast convention.
         val centRows = cents

@@ -17,9 +17,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - every "PLANS.md round N" citation must resolve to a round-N
   *    section header in PLANS.md, and
   *  - every `FooBench`/`FooProbe`/`FooAudit` tool and every
-  *    `graft.tools.Foo` named in src/main, README.md, the verify skill or
-  *    tools/run_graft.sh must exist as a main source file (PLANS.md is
-  *    history and may name deleted tools), and
+  *    `graft.tools.Foo` named in src/main, src/test (this file aside),
+  *    README.md, the verify skill or tools/run_graft.sh must exist as a
+  *    main source file (PLANS.md is history and may name deleted
+  *    tools), and
   *  - every backticked `graft.<seg>.<key>` conf key cited in src/main,
   *    README.md or the verify skill must be read somewhere in src/main
   *    as a string literal — a doc must not advertise a knob the code
@@ -98,12 +99,16 @@ class CitationsSpec extends AnyFunSuite {
 
   test("every *Bench / *Probe tool cited in src/main and the docs exists") {
     val exist = sourceNames("src/main/scala")
+    // this file's own scaladoc names the FooBench / graft.tools.Foo shapes
+    val tests = scalaFiles(repoRoot.resolve("src/test/scala"))
+      .filterNot(_.getFileName.toString == "CitationsSpec.scala")
+      .map(p => p -> Files.readString(p))
     val docs = docTexts("README.md", ".claude/skills/verify/SKILL.md",
       "tools/run_graft.sh")
     val citePattern =
       """\b([A-Z]\w*(?:Bench|Probe|Audit))\b|\bgraft\.tools\.(\w+)""".r
     val missing = for {
-      (path, text) <- mainTexts ++ docs
+      (path, text) <- mainTexts ++ tests ++ docs
       name <- citePattern.findAllMatchIn(text)
         .map(m => Option(m.group(1)).getOrElse(m.group(2))).toSeq.distinct
       if !exist.contains(name)

@@ -8,16 +8,14 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Pathological-CONTENT robustness (the sibling of EmptyInputSpec's
-  * empty-TABLE contract): every division-bearing operator family runs
+  * empty-TABLE contract): every p-query in `Pipeline.queries` runs
   * without crashing on a corpus of empty texts, 1-token docs,
   * stopword-only docs, one-token-repeated docs, and a zero-norm
   * 64-dim embedding. This is exactly the input class that crashed the
   * cosine family under Spark 4 ANSI before round-13's cos6 guard
   * (DIVIDE_BY_ZERO on a zero-norm vector) — kept green mechanically
-  * so the next ratio expression can't reintroduce it. The full
-  * all-p-query sweep lives in graft.tools.PathologyProbe (round-13
-  * run: failures=0); this spec pins the families where data-derived
-  * denominators live. */
+  * so the next ratio expression can't reintroduce it. One test per
+  * registered name, so a new p-query is covered the day it lands. */
 object PathologyInputSpec {
   lazy val dir: String = {
     val spark = graft.SparkSpec.spark
@@ -47,25 +45,10 @@ object PathologyInputSpec {
 
 class PathologyInputSpec extends SparkSpec {
 
-  // the division-bearing families: per-doc text ratios, cosine/ANN
-  // (incl. the zero-norm vector), retrieval, and the substring family
-  private val names = Seq(
-    "p04_ann_cosine_topk", "p05_ann_lsh_bucketed", "p06_text_stats",
-    "p07_lang_profile", "p13_cosine_neardup", "p20_ann_ivf",
-    "p37_span_dedup", "p38_decontamination", "p42_ann_quantized",
-    "p49_semantic_neardup", "p51_lm_fluency", "p72_ann_recall",
-    "p73_perplexity_buckets", "p74_bm25_retrieval", "p75_span_strip",
-    "p76_gopher_rules", "p92_decontaminate", "p94_semdedup_prune",
-    "p95_tokenizer_fertility", "p104_ann_multiprobe",
-    "p106_perplexity_by_lang", "p114_run_strip", "p125_ann_ivf2",
-    "p126_semantic_decontam", "p127_rrf_fusion", "p129_rrf_ivf_audit",
-    "p131_substring_strip", "p132_strip_policy_matrix",
-    "p133_substring_contam", "p134_contam_surgery")
-
-  names.foreach { name =>
+  Pipeline.queries.toSeq.sortBy(_._1).foreach { case (name, q) =>
     test(s"$name survives pathological content") {
       // contract: no crash; rows are whatever the op's semantics say
-      Pipeline.queries(name)(spark, PathologyInputSpec.dir)
+      q(spark, PathologyInputSpec.dir)
         .write.mode("overwrite").format("noop").save()
     }
   }
