@@ -4,26 +4,20 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
 /** Materialization of REUSED subtrees (LSH band tables, fingerprints,
-  * capped candidate sets, …): one place deciding HOW a stage is cut, so
-  * deployments can trade speed against failure recovery without touching
-  * query code. Selected by `graft.stage.materialize`:
+  * capped candidate sets, …): one place deciding HOW a stage is cut.
+  * Selected by `graft.stage.materialize`:
   *
   *  - `local` (default): `localCheckpoint` — blocks pinned to executor
-  *    storage, lineage truncated. Fastest, and the right call on
-  *    local[n] or interactive clusters; the documented caveat is that a
-  *    LOST EXECUTOR kills the job (no lineage left to recompute from).
-  *  - `reliable`: `checkpoint` to the Spark checkpoint directory
-  *    (defaulted under java.io.tmpdir if unset — point it at
-  *    HDFS/object storage via `SparkContext.setCheckpointDir` on a real
-  *    cluster). Survives executor loss; costs a filesystem write, plus
-  *    Spark's lazy-checkpoint recompute of the subtree on first action.
+  *    storage, lineage truncated. The engine runs `local[n]`, where a
+  *    lost executor is a lost driver, so lineage buys no recovery.
   *  - `none`: pass-through; the subtree recomputes at every reuse
-  *    (correct, shuffle-heavy — for measuring what staging saves).
+  *    (correct, shuffle-heavy — for plan inspection and for measuring
+  *    what staging saves).
   *
   * Any other value is rejected with an IllegalArgumentException. There
   * is no cache-backed mode: cached blocks outlive the invocation, which
   * would reuse results across invocations outside
-  * `graft.artifacts.reuse`. All modes return the same rows;
+  * `graft.artifacts.reuse`. Both modes return the same rows;
   * ReuseStageSpec pins that. */
 object Stage {
 
@@ -46,34 +40,22 @@ object Stage {
     def stagedDisk: DataFrame = Stage.materializeDisk(df)
   }
 
-  def materialize(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    spark.conf.get("graft.stage.materialize", "local") match {
-      case "local" => df.localCheckpoint(eager = false)
-      case "reliable" =>
-        val sc = spark.sparkContext
-        if (sc.getCheckpointDir.isEmpty)
-          sc.setCheckpointDir(
-            s"${System.getProperty("java.io.tmpdir")}/graft-checkpoint")
-        df.checkpoint(eager = false)
-      case "none" => df
-      case other => throw new IllegalArgumentException(
-        s"graft.stage.materialize must be one of local|reliable|none," +
-          s" got '$other'")
-    }
-  }
+  def materialize(df: DataFrame): DataFrame =
+    if (cuts(df)) df.localCheckpoint(eager = false) else df
 
-  /** [[StageOps.stagedDisk]]: same mode switch, disk-backed levels.
-    * `local` keeps localCheckpoint's lineage-truncation semantics (and
-    * its lost-executor caveat) but stores the blocks DISK_ONLY.
-    * `reliable` and `none` are unchanged — a reliable checkpoint is
-    * already a filesystem write. */
-  def materializeDisk(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    spark.conf.get("graft.stage.materialize", "local") match {
-      case "local" =>
-        df.localCheckpoint(eager = false, StorageLevel.DISK_ONLY)
-      case _ => materialize(df)
+  /** [[StageOps.stagedDisk]]: same mode switch; `local` keeps
+    * localCheckpoint's lineage truncation but stores the blocks
+    * DISK_ONLY. */
+  def materializeDisk(df: DataFrame): DataFrame =
+    if (cuts(df)) df.localCheckpoint(eager = false, StorageLevel.DISK_ONLY)
+    else df
+
+  /** `local` cuts the plan, `none` passes it through. */
+  private def cuts(df: DataFrame): Boolean =
+    df.sparkSession.conf.get("graft.stage.materialize", "local") match {
+      case "local" => true
+      case "none" => false
+      case other => throw new IllegalArgumentException(
+        s"graft.stage.materialize must be one of local|none, got '$other'")
     }
-  }
 }

@@ -46,9 +46,7 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   *    (`UnsafeExternalRowSorter`, the engine under SortExec): rows held
   *    so far plus the rest of the input are sorted by (key, order) with
   *    disk spill, and the exact top-k per key is read off the sorted
-  *    runs. Same answer, bounded memory, no config needed — though
-  *    `TopKRewriteRule` still honors `graft.topk.rewrite.enabled=false`
-  *    to keep the WindowExec plan wholesale if wanted.
+  *    runs. Same answer, bounded memory, no config needed.
   *
   * The caller's sort order must
   * be TOTAL (include a tiebreak column) for the result set to be

@@ -32,11 +32,10 @@ import org.apache.spark.sql.types.IntegerType
   * makes both exact, which is the same contract the window pattern
   * already carries.
   *
-  * Opt-out: `graft.topk.rewrite.enabled=false` leaves every window
-  * top-k on Spark's spillable sort-based WindowExec — the escape hatch
-  * for partitions whose key cardinality makes even the final pass's
-  * keys × k heap rows a memory risk (see the cap discussion on
-  * [[TopKPerKeyExec]]).
+  * There is no opt-out: past `graft.topk.finalKeyCap` keys a final task
+  * degrades to a spillable sort on its own (see [[TopKPerKeyExec]]), so
+  * a high-cardinality key costs no more memory than the window plan.
+  * A reference that must stay on the window plan keeps the rank column.
   */
 object TopKRewriteRule extends Rule[LogicalPlan] {
 
@@ -59,11 +58,7 @@ object TopKRewriteRule extends Rule[LogicalPlan] {
       case _ => None
     }
 
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!conf.getConfString("graft.topk.rewrite.enabled", "true").toBoolean) plan
-    else applyRewrite(plan)
-
-  private def applyRewrite(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case p @ Project(projList,
         Filter(cond,
           Window(Seq(alias @ Alias(

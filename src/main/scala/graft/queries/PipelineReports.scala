@@ -360,30 +360,14 @@ trait PipelineReports extends PipelineAssembly {
     * shared session artifacts, paid once per corpus build. Thresholds
     * are the classic lines (PSI 0.2, recall 0.8, zero tolerance for
     * anomalies/orphans); `alarm` is NULL when a check has no defined
-    * value (an empty corpus has no recall). */
-  /** Which semantic-contamination screen the report family composes:
-    * `exact` (default — p126's N·|eval| brute screen, the release/
-    * weekly posture) or `ivf` (p136's cell-bucketed served screen, the
-    * at-cadence posture: at sf10 the exact screen alone put
-    * p110_health_report at 1175 s, which a monitor that pages cannot
-    * afford; p129 prices the recall trade). The served variant is
-    * gated by its own oracle twin (p137_health_report_ivf). */
-  private def semanticScreen(substrate: String): Q =
-    substrate match {
-      case "exact" => p126SemanticDecontam
-      case "ivf"   => p136SemanticDecontamIvf
-      case other => throw new IllegalArgumentException(
-        s"graft.contam.substrate must be exact|ivf, got '$other'")
-    }
+    * value (an empty corpus has no recall). The semantic-contamination
+    * row composes the exact screen (p126's N·|eval| brute screen, the
+    * release/weekly posture); p137 is the same report on the served
+    * screen. */
+  private[queries] def p110HealthReport: Q =
+    healthReport(p126SemanticDecontam)
 
-  /** Deployment entry point: the substrate conf is read HERE, once, and
-    * threaded down as a plain parameter — it never round-trips through
-    * mutable session state, so concurrent plan construction of p110 and
-    * p137 on one shared session cannot cross-contaminate postures. */
-  private[queries] def p110HealthReport: Q = (s, d) =>
-    healthReport(s.conf.get("graft.contam.substrate", "exact"))(s, d)
-
-  private def healthReport(substrate: String): Q = (s, d) => {
+  private def healthReport(semanticScreen: Q): Q = (s, d) => {
     def row(check: String, v: DataFrame, threshold: Double,
         higherBad: Boolean): DataFrame = {
       val value = col("v").cast(DoubleType)
@@ -419,7 +403,7 @@ trait PipelineReports extends PipelineAssembly {
       .union(row("lexical_contam_docs",
         p92Decontaminate(s, d).agg(count(lit(1)).as("v")), 0.0, true))
       .union(row("semantic_contam_docs",
-        semanticScreen(substrate)(s, d).agg(count(lit(1)).as("v")), 0.0, true))
+        semanticScreen(s, d).agg(count(lit(1)).as("v")), 0.0, true))
       .union(row("substring_contam_docs",
         p133SubstringContam(s, d).agg(
           sum(col("verbatim_leak").cast(LongType)).as("v")), 0.0, true))
@@ -427,15 +411,15 @@ trait PipelineReports extends PipelineAssembly {
 
   /** The health report in its AT-CADENCE posture — p110 with the
     * semantic-contamination row on the IVF-SERVED screen (p136) instead
-    * of the exact one. Registered as its own gate query so the served
-    * substrate is oracle-checked end to end (its oracle twin embeds the
-    * p136 oracle where p110's embeds p126's); deployments get the same
-    * effect on the real p110 by setting `graft.contam.substrate=ivf`.
-    * The substrate is passed as a plain parameter — no session conf is
-    * touched, so a shared session's default posture is untouched even
-    * under concurrent plan construction of p110/p130 on the same
-    * session. */
-  private[queries] def p137HealthReportIvf: Q = healthReport("ivf")
+    * of the exact one: at sf10 the exact screen alone put p110 at
+    * 1175 s, which a monitor that pages cannot afford (p129 and
+    * graft.tools.ServedRecall price the recall trade). Registered as
+    * its own gate query so the served screen is oracle-checked end to
+    * end (its oracle twin embeds the p136 oracle where p110's embeds
+    * p126's). The screen is a plain parameter, so building p110 and
+    * p137 on one shared session cannot cross-contaminate postures. */
+  private[queries] def p137HealthReportIvf: Q =
+    healthReport(p136SemanticDecontamIvf)
 
 
   /** Per-source contamination breakdown — the ACTIONABLE form of the
@@ -458,8 +442,7 @@ trait PipelineReports extends PipelineAssembly {
       .staged // read by the census and both flag joins
     val lex = p92Decontaminate(s, d).select(col("doc_id"))
       .join(src, "doc_id").staged
-    val sem = semanticScreen(s.conf.get("graft.contam.substrate", "exact"))(
-      s, d).select(col("doc_id"))
+    val sem = p126SemanticDecontam(s, d).select(col("doc_id"))
       .join(src, "doc_id").staged
     val census = src.groupBy("source")
       .agg(count(lit(1)).as("n_train_docs"))

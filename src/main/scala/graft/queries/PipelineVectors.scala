@@ -519,27 +519,22 @@ trait PipelineVectors extends PipelineText {
     * locality that far below nearest-neighbor similarity), so the
     * single-probe screen catches only ~14% of p126's flagged docs at
     * sf0.1 — IVF compresses top-k retrieval (p129's fused twin: 92–97
-    * /100), not low-τ threshold screens. `graft.contam.probes` (read
-    * here, threaded as a parameter) dials the trade: the eval side —
+    * /100), not low-τ threshold screens. The gated query is P = 1;
+    * [[servedSemanticScreen]] takes the probe count P as an argument
+    * (graft.tools.ServedRecall prices it): the eval side —
     * benchmark-sized at ANY corpus — re-ranks against the broadcast
     * codebook and keeps its top-P cells, multiplying recall AND cost
-    * by ~P (curve in PLANS.md). Default stays P = 1 (the oracle-gated
-    * plan); the exact screen remains the release/weekly posture, and
-    * the served screen is a TREND monitor whose flags are hit-for-hit
-    * exact (containment proof in ServedScreenSpec) with a now-priced,
-    * dialable miss rate. */
-  private[queries] def p136SemanticDecontamIvf: Q = (s, d) => {
-    // the probe count is part of the artifact IDENTITY: a session that
-    // dials graft.contam.probes (ServedScreenSpec's monotonicity walk,
-    // a deployment pricing recall) must never read a frame built at a
-    // different P back out of the registry
-    val probes = s.conf.get("graft.contam.probes", "1").toInt
-    opArtifact(s"op_p136_semantic_decontam_ivf_p$probes")(
-      servedSemanticScreen(probes))(s, d)
-  }
+    * by ~P (curve in PLANS.md). The exact screen remains the
+    * release/weekly posture, and the served screen is a TREND monitor
+    * whose flags are hit-for-hit exact (containment proof in
+    * ServedScreenSpec) with a priced, dialable miss rate. */
+  private[queries] def p136SemanticDecontamIvf: Q =
+    opArtifact("op_p136_semantic_decontam_ivf")(servedSemanticScreen(1))
 
-  private def servedSemanticScreen(probes: Int): Q = (s, d) => {
-    require(probes >= 1, s"graft.contam.probes must be >= 1, got $probes")
+  /** p136's served screen at `probes` IVF cells per eval vector. Not
+    * artifact-held: only P = 1 is a gate query. */
+  private[graft] def servedSemanticScreen(probes: Int): Q = (s, d) => {
+    require(probes >= 1, s"probes must be >= 1, got $probes")
     val assigned = ivfAssigned(s, d) // (vec_id, v, nrm, cell)
     val evBase = assigned.filter(pmod(col("vec_id"), lit(29L)) === 7)
     val ev =
@@ -1417,7 +1412,7 @@ trait PipelineVectors extends PipelineText {
       count(when(pmod(col("vec_id"), lit(7L)) =!= 0, 1)).as("n_prev"),
       count(when(pmod(col("vec_id"), lit(5L)) =!= 0, 1)).as("n_next"))
     val k = kmeansK(s, d)
-    val grid = broadcast(s.range(0, k).toDF("cell"))
+    val grid = s.range(0, k).toDF("cell")
     val f = grid.join(counts, Seq("cell"), "left_outer")
       .select(col("cell"),
         coalesce(col("n_prev"), lit(0L)).as("n_prev"),

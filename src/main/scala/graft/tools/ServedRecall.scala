@@ -16,7 +16,9 @@ import graft.queries.Pipeline
   *     the served screen retains (n_eval_hits mass).
   * The intersection is computed by an actual join (not assumed from
   * the ServedScreenSpec containment proof), so a containment
-  * regression would show up here as inter < served.
+  * regression would show up here as inter < served. Each P is passed
+  * straight to the screen (`Pipeline.servedSemanticScreen`); no session
+  * state is touched.
   *
   *   sbt "runMain graft.tools.ServedRecall <sfDir> [probesCsv]"
   */
@@ -34,9 +36,7 @@ object ServedRecall {
     println(f"== served-screen recall @ $sfDir " +
       f"(exact: $nExact docs, $pairsExact pair hits) ==")
     probeList.foreach { p =>
-      spark.conf.set("graft.contam.probes", p.toString)
-      val served = Pipeline
-        .queries("p136_semantic_decontam_ivf")(spark, sfDir).cache()
+      val served = Pipeline.servedSemanticScreen(p)(spark, sfDir).cache()
       val nServed = served.count()
       val inter = served.select("doc_id")
         .join(exact.select("doc_id"), "doc_id").count()
@@ -49,7 +49,6 @@ object ServedRecall {
           else pairsServed.toDouble / pairsExact}%.4f")
       served.unpersist()
     }
-    spark.conf.unset("graft.contam.probes")
     spark.stop()
   }
 }

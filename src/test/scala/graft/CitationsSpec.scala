@@ -24,7 +24,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - every backticked `graft.<seg>.<key>` conf key cited in src/main,
   *    README.md or the verify skill must be read somewhere in src/main
   *    as a string literal — a doc must not advertise a knob the code
-  *    no longer has.
+  *    no longer has, and
+  *  - every `"graft.<seg>.<key>` string literal in src/test (this file
+  *    aside), tools/ or perfbench/src must be read in src/main the same
+  *    way — a test or harness that sets a deleted conf silently does
+  *    nothing.
   *
   * It also keeps the suite hermetic: no test source may name an
   * absolute path outside the checkout and the shared test-data root.
@@ -41,13 +45,15 @@ class CitationsSpec extends AnyFunSuite {
     cwd
   }
 
-  private def scalaFiles(dir: Path): Seq[Path] = {
+  private def filesEnding(dir: Path, exts: String*): Seq[Path] = {
     val stream = Files.walk(dir)
     try stream.iterator().asScala
-      .filter(p => p.toString.endsWith(".scala"))
+      .filter(p => exts.exists(p.toString.endsWith(_)))
       .toSeq
     finally stream.close() // Files.walk holds directory handles open
   }
+
+  private def scalaFiles(dir: Path): Seq[Path] = filesEnding(dir, ".scala")
 
   private def sourceNames(dir: String): Set[String] =
     scalaFiles(repoRoot.resolve(dir))
@@ -118,10 +124,12 @@ class CitationsSpec extends AnyFunSuite {
         missing.mkString("\n  "))
   }
 
-  test("every graft.* conf key cited in src/main and the docs is read " +
-      "in src/main") {
-    // `graft.tools.Profile`, `graft.functions.Portable.h60`: classes in a
-    // package, not conf keys — the tool test above covers those
+  /** `graft.<seg>.<key>` keys after `prefix` in `texts` that no src/main
+    * string literal reads. `graft.tools.Profile`,
+    * `graft.functions.Portable.h60`: classes in a package, not conf
+    * keys — the tool test above covers those. */
+  private def unreadKeys(texts: Seq[(Path, String)],
+      prefix: String): Seq[String] = {
     val packages: Set[String] = {
       val stream = Files.list(repoRoot.resolve("src/main/scala/graft"))
       try stream.iterator().asScala.filter(Files.isDirectory(_))
@@ -129,18 +137,39 @@ class CitationsSpec extends AnyFunSuite {
       finally stream.close()
     }
     val code = mainTexts.map(_._2).mkString("\n")
-    val citePattern = """`graft\.(\w+)\.([\w.]*\w)""".r
-    val dead = for {
-      (path, text) <- mainTexts ++
-        docTexts("README.md", ".claude/skills/verify/SKILL.md")
-      m <- citePattern.findAllMatchIn(text).toSeq
+    val keyPattern = (prefix + """graft\.(\w+)\.([\w.]*\w)""").r
+    (for {
+      (path, text) <- texts
+      m <- keyPattern.findAllMatchIn(text).toSeq
       if !packages.contains(m.group(1))
       key = s"graft.${m.group(1)}.${m.group(2)}"
       if !code.contains("\"" + key + "\"")
-    } yield s"$path cites $key"
+    } yield s"$path names $key").distinct
+  }
+
+  test("every graft.* conf key cited in src/main and the docs is read " +
+      "in src/main") {
+    val dead = unreadKeys(mainTexts ++
+      docTexts("README.md", ".claude/skills/verify/SKILL.md"), "`")
     assert(dead.isEmpty,
       s"\ndead conf keys (read the key in src/main or fix the text):\n  " +
-        dead.distinct.mkString("\n  "))
+        dead.mkString("\n  "))
+  }
+
+  test("every graft.* conf key a test, tool or harness sets is read " +
+      "in src/main") {
+    // perfbench/src is the benchmark harness: scanned, never edited here
+    val texts = (scalaFiles(repoRoot.resolve("src/test/scala"))
+      .filterNot(_.getFileName.toString == "CitationsSpec.scala") ++
+      filesEnding(repoRoot.resolve("tools"), ".sh", ".py", ".scala") ++
+      scalaFiles(repoRoot.resolve("perfbench/src")))
+      .map(p => p -> Files.readString(p))
+    assert(texts.exists(_._2.contains("\"graft.")),
+      "the scan found no graft.* literal at all")
+    val dead = unreadKeys(texts, "[\"']")
+    assert(dead.isEmpty,
+      "\nconf keys set outside src/main that nothing reads (delete the " +
+        "setting or read the key):\n  " + dead.mkString("\n  "))
   }
 
   test("no test source names an absolute path outside the repo and test data") {

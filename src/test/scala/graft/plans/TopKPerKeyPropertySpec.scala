@@ -35,9 +35,7 @@ object TopKPerKeyPropertySpec extends Properties("TopKPerKey") {
         .repartition(7) // force multi-partition partial heaps
       val w = Window.partitionBy(col("key"))
         .orderBy(col("v").desc, col("tb").asc)
-      val expect = df.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= k).drop("rn")
-        .collect().map(_.toSeq).toSet
+      val expect = TopKPerKeySpec.windowRows(df, w, k)
       val got = topK(df, Seq("key"), Seq("v" -> false, "tb" -> true), k)
         .collect().map(_.toSeq).toSet
       got == expect

@@ -4,12 +4,10 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** The staging switch (`graft.stage.materialize`, graft.Stage): every
-  * mode must return the same rows for a query whose plan REUSES the
-  * staged subtree — the switch trades failure recovery for speed, never
-  * answers. `reliable` must actually write checkpoint files (the
-  * cluster-grade story: executor loss recovers from the checkpoint
-  * instead of failing the job, unlike pinned localCheckpoint blocks). */
+/** The staging switch (`graft.stage.materialize`, graft.Stage): both
+  * modes must return the same rows for a query whose plan REUSES the
+  * staged subtree — `none` recomputes what `local` cuts, never changes
+  * answers. */
 class ReuseStageSpec extends SparkSpec {
 
   // a pipeline query whose implementation stages a reused subtree
@@ -20,11 +18,9 @@ class ReuseStageSpec extends SparkSpec {
 
   test("all staging modes agree with the default") {
     val expect = run() // default: local
-    Seq("reliable", "none").foreach { mode =>
-      spark.conf.set("graft.stage.materialize", mode)
-      try assert(run() == expect, s"mode=$mode diverged")
-      finally spark.conf.unset("graft.stage.materialize")
-    }
+    spark.conf.set("graft.stage.materialize", "none")
+    try assert(run() == expect, "mode=none diverged")
+    finally spark.conf.unset("graft.stage.materialize")
   }
 
   // a query whose corpus-sized subtrees use the DISK-backed cut
@@ -36,11 +32,9 @@ class ReuseStageSpec extends SparkSpec {
 
   test("all staging modes agree through stagedDisk cuts") {
     val expect = runDisk() // default: local → DISK_ONLY localCheckpoint
-    Seq("reliable", "none").foreach { mode =>
-      spark.conf.set("graft.stage.materialize", mode)
-      try assert(runDisk() == expect, s"mode=$mode diverged")
-      finally spark.conf.unset("graft.stage.materialize")
-    }
+    spark.conf.set("graft.stage.materialize", "none")
+    try assert(runDisk() == expect, "mode=none diverged")
+    finally spark.conf.unset("graft.stage.materialize")
   }
 
   test("stagedDisk local mode keeps blocks OFF the unified memory pool") {
@@ -65,25 +59,11 @@ class ReuseStageSpec extends SparkSpec {
       s"stagedDisk blocks occupy memory: ${mine.head.memSize}")
   }
 
-  test("reliable mode writes recoverable checkpoint files") {
-    spark.conf.set("graft.stage.materialize", "reliable")
-    try {
-      val staged = graft.Stage.materialize(
-        Tables(spark, sf, "nation").select(col("n_nationkey")))
-      assert(staged.count() == 25)
-      val dir = spark.sparkContext.getCheckpointDir
-      assert(dir.isDefined, "no checkpoint dir was set")
-      val files = new java.io.File(new java.net.URI(dir.get))
-      def any(f: java.io.File): Boolean =
-        f.isFile || Option(f.listFiles()).exists(_.exists(any))
-      assert(any(files), s"no checkpoint data under $dir")
-    } finally spark.conf.unset("graft.stage.materialize")
-  }
-
   test("an unknown staging mode is rejected loudly") {
-    // `persist` was a mode once: its cached blocks outlived the
-    // invocation, reuse that bypassed graft.artifacts.reuse
-    Seq("bogus", "persist").foreach { mode =>
+    // `persist` and `reliable` were modes once (cached blocks that
+    // outlived the invocation; checkpoint files for executor loss
+    // local[n] cannot have): a stale setting must fail, not fall back
+    Seq("bogus", "persist", "reliable").foreach { mode =>
       spark.conf.set("graft.stage.materialize", mode)
       try {
         val nation = Tables(spark, sf, "nation")
