@@ -44,7 +44,7 @@ object Session {
       // analogue of the reference's randomized join-order search over
       // .stat files (RandomOptimizer.java:126-216, PlanCost.java:123-189);
       // stats are collected once per catalog registration
-      // (Tables.registerAll), and plans without stats are untouched
+      // (Tables.registerSome), and plans without stats are untouched
       .config("spark.sql.cbo.enabled", "true")
       .config("spark.sql.cbo.joinReorder.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")

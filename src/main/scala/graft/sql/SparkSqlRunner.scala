@@ -7,12 +7,12 @@ import graft.Tables
 /** Full ANSI Spark SQL over the catalog — the second query front end next
   * to the reference-dialect parser (MiniSql). Tables of a scale-factor
   * directory are registered (CREATE + ANALYZE, see `Tables.registerOne`)
-  * lazily, PER REFERENCED TABLE: the r17 shape registered all ten tables
-  * on a session's first statement, which billed the whole catalog build —
-  * ten CREATEs plus ten ANALYZE ... FOR COLUMNS scans — to whichever
-  * query happened to run first (the sf0.1 sweep's s24 absorbed 6+ s of it,
-  * VERDICT r17 §next-round #4). Now each statement pays only for the
-  * tables it names, once per (session, directory, table).
+  * lazily, PER REFERENCED TABLE, once per (session, directory, table): a
+  * statement pays only for the tables it names, never for the whole
+  * catalog build (r17 billed all ten tables' registration to whichever
+  * query ran first — the sf0.1 sweep's s24 absorbed 6+ s of it, VERDICT
+  * r17 §next-round #4). A batch of tables registers concurrently
+  * (`Tables.registerSome`).
   */
 object SparkSqlRunner {
   // per-session registration state: the directory registered plus the
@@ -26,14 +26,9 @@ object SparkSqlRunner {
         (String, java.util.Set[String])]())
 
   /** Register everything (QueryMain's interactive catalog, spec setup).
-    * Keeps registerAll's contract: throws only when every table failed. */
-  def ensureRegistered(spark: SparkSession, sfDir: String): Unit = {
-    val failed = ensureTables(spark, sfDir, Tables.names)
-    if (failed.size == Tables.names.size)
-      throw new IllegalStateException(
-        s"every table failed to register from $sfDir — first cause: " +
-          failed.head._2.getMessage, failed.head._2)
-  }
+    * Throws only when every table failed (`Tables.requireAny`). */
+  def ensureRegistered(spark: SparkSession, sfDir: String): Unit =
+    Tables.requireAny(sfDir, ensureTables(spark, sfDir, Tables.names))
 
   /** The catalog tables `sql` references — known names matched
     * case-insensitively on word boundaries. Over-matching (a table name

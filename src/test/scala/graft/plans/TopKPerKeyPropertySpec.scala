@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.forAllNoShrink
 
 import graft.SparkSpec
 import graft.plans.TopKPerKey.topK
@@ -27,8 +27,11 @@ object TopKPerKeyPropertySpec extends Properties("TopKPerKey") {
     } yield (key, v, tb))
   } yield r
 
+  // no shrinking: the default shrinkers leave the generators' ranges (a
+  // failure at k = 2 was reported as k = 0, which TopKPerKeyNode rejects),
+  // so a shrunk counterexample need not be one this property can produce
   property("native == window form for arbitrary skewed data and k") =
-    forAll(rows, Gen.chooseNum(1, 6)) { (data, k) =>
+    forAllNoShrink(rows, Gen.chooseNum(1, 6)) { (data, k) =>
       val spark = SparkSpec.spark
       import spark.implicits._
       val df = data.toDF("key", "v", "tb")

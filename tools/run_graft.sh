@@ -6,7 +6,10 @@
 #
 #   tools/run_graft.sh graft.tools.Profile tools/sf10 1 p02_minhash_neardup
 #
-# Requires a prior `sbt compile` (classes under target/scala-2.13/classes).
+# A prior `sbt compile` suffices: classes come from
+# target/scala-2.13/classes and resources straight from src/main/resources,
+# because `sbt compile` does not copy them into the classes directory (its
+# META-INF/services DataSourceRegister is what resolves `graft-txt`, q54).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 ADD_OPENS=""
@@ -19,5 +22,5 @@ exec java $ADD_OPENS \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "target/scala-2.13/classes:src/main/resources:/opt/spark/jars/*" \
   "$@"
