@@ -224,7 +224,7 @@ object Tables {
     * names that failed with their causes, in `tables` order.
     *
     * The tables register concurrently on up to `defaultParallelism`
-    * threads (one core: serial, on the calling thread), overlapping their
+    * threads (one core or one table: one thread), overlapping their
     * ANALYZE scans and Janino compiles: cold sf0.01 registration of all ten
     * on 4 vCPU, median 14.9 s serial vs 11.9 s concurrent (PLANS.md
     * "Catalog registration made concurrent"). The pool is made per call
@@ -245,15 +245,19 @@ object Tables {
         unregister(spark, n)
         Some(n -> e)
       }
-    val width = math.min(tables.size, spark.sparkContext.defaultParallelism)
-    if (width <= 1) tables.flatMap(attempt)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(width)
-      try tables.map(n => pool.submit(() => attempt(n))).flatMap { f =>
-        try f.get()
-        catch { case e: java.util.concurrent.ExecutionException =>
-          throw e.getCause } // an Error, as the serial loop would throw
-      } finally pool.shutdownNow(): Unit
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, math.min(tables.size, spark.sparkContext.defaultParallelism)))
+    try tables.map(n => pool.submit(() => attempt(n))).flatMap { f =>
+      try f.get()
+      catch { case e: java.util.concurrent.ExecutionException =>
+        throw e.getCause } // an Error: `attempt` keeps every Exception
+    } finally {
+      // on a throw (a worker's Error, an interrupted caller) stop the other
+      // tables and wait for them, so no DROP, CREATE, ANALYZE or failure
+      // cleanup still runs against the catalog after this returns
+      pool.shutdownNow(): Unit
+      pool.awaitTermination(Long.MaxValue,
+        java.util.concurrent.TimeUnit.NANOSECONDS): Unit
     }
   }
 

@@ -9,7 +9,8 @@ import org.apache.spark.sql.graftbridge.ListenerBridge
 
 /** `Tables.registerSome` registers a batch of tables concurrently; these
   * pin what the concurrency must not change: the statistics CBO costs
-  * joins with, and the caller's job group on every job it launches. */
+  * joins with, the caller's job group on every job it launches, and that
+  * nothing it started still runs once it has returned or thrown. */
 class TablesRegistrationSpec extends SparkSpec {
 
   private def catalogStats(): Map[String, Option[CatalogStatistics]] =
@@ -57,5 +58,31 @@ class TablesRegistrationSpec extends SparkSpec {
     // at least one ANALYZE job per table
     assert(seen.size >= Tables.names.size, seen)
     assert(seen.forall(_.contains("graft-registration-spec")), seen)
+  }
+
+  test("an interrupted registration stops its other tables before it throws") {
+    @volatile var thrown: Option[Throwable] = None
+    // interrupted before the call: its first wait on a table throws while
+    // the pool's workers have just started
+    val caller = new Thread(() => {
+      Thread.currentThread.interrupt()
+      try Tables.registerSome(spark, sf, Tables.names): Unit
+      catch { case t: Throwable => thrown = Some(t) }
+    })
+    caller.start()
+    caller.join()
+    assert(thrown.exists(_.isInstanceOf[InterruptedException]), thrown)
+    // a worker still running after the throw would go on to CREATE,
+    // ANALYZE or (interrupted) unregister its table later
+    def catalog() = {
+      val c = spark.sessionState.catalog
+      c.listTables("default").map(id =>
+        id.table -> c.getTempViewOrPermanentTableMetadata(id).stats).toMap
+    }
+    val left = catalog()
+    Thread.sleep(2000)
+    assert(catalog() == left)
+    assert(Tables.registerSome(spark, sf, Tables.names).isEmpty)
+    assert(catalogStats().values.forall(_.exists(_.rowCount.isDefined)))
   }
 }
