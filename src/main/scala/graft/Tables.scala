@@ -125,14 +125,17 @@ object Tables {
     *
     * EventsContractSpec pins all three paths against fixture files so the
     * next silent regeneration turns a test red instead of darking the gate. */
-  private[graft] def normalizeTs(df: DataFrame): DataFrame = {
+  private[graft] def normalizeTs(df: DataFrame): DataFrame =
+    df.withColumn("ts", expr(tsSql(df.schema("ts").dataType)))
+
+  /** The SQL expression [[normalizeTs]] projects for a `ts` scanned as
+    * `dt`; the registered `events` view uses the same one. */
+  private def tsSql(dt: org.apache.spark.sql.types.DataType): String = {
     import org.apache.spark.sql.types._
-    df.schema("ts").dataType match {
-      case LongType          =>
-        df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampNTZType  =>
-        df.withColumn("ts", col("ts").cast(TimestampType))
-      case TimestampType     => df
+    dt match {
+      case LongType         => "timestamp_micros(ts div 1000)"
+      case TimestampNTZType => "CAST(ts AS TIMESTAMP)"
+      case TimestampType    => "ts"
       case other => throw new IllegalStateException(
         s"events.ts arrived as unsupported physical type $other — " +
         "extend Tables.normalizeTs for the new testdata encoding")
@@ -163,65 +166,78 @@ object Tables {
     }
   }
 
-  /** Register one table so `spark.sql` / the mini-SQL front end can
-    * resolve its bare name, with the statistics the cost-based
+  /** The catalog database holding `sfDir`'s tables, named from its
+    * normalized absolute path so `d` and `d/` share one. */
+  def database(sfDir: String): String = {
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(absolute(sfDir).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    "graft_" + sha.take(8).map(b => f"$b%02x").mkString
+  }
+
+  // LOCATION resolves RELATIVE paths against the warehouse dir, not the
+  // process CWD — a relative sfDir (e.g. the scale rungs under tools/)
+  // would register ten empty tables and fail every SQL query with
+  // UNABLE_TO_INFER_SCHEMA while the DataFrame path reads the same
+  // directory fine. Qualify it once here.
+  private def absolute(sfDir: String): String =
+    new java.io.File(sfDir).getAbsoluteFile.toPath.normalize.toString
+
+  /** Register one table in database `db` so `spark.sql` / the mini-SQL
+    * front end can resolve its name, with the statistics the cost-based
     * optimizer reorders joins with (the Catalyst counterpart of the
     * reference's `.stat` files, `RandomOptimizer.java:126-216`).
     *
     * The table becomes an EXTERNAL catalog table over the parquet
     * location, followed by `ANALYZE TABLE … COMPUTE STATISTICS FOR
     * COLUMNS` over its `analyzable` columns: row counts + per-column
-    * NDV/min/max live in the session catalog, which is what
+    * NDV/min/max live in the catalog, which is what
     * `CostBasedJoinReorder` needs on every join input (a temp view over
     * a bare parquet read exposes only sizeInBytes, and CBO stays inert).
-    * The ANALYZE scan is a one-time cost per (session, directory, table)
-    * — [[graft.sql.SparkSqlRunner]] caches registration. [[registerSome]]
-    * runs this for several tables at once, so it touches only table `n`'s
-    * own catalog entries.
+    * The ANALYZE scan is a one-time cost per (SparkContext, directory,
+    * table) — [[graft.sql.SparkSqlRunner]] records registration. Every
+    * name is qualified with `db`: [[registerSome]] runs this for several
+    * tables at once on its own threads, so it touches only table `n`'s
+    * own catalog entries and no session's current database.
     *
     * `events` needs a normalization expression a catalog table cannot
     * carry (normalizeTs), so it is registered as catalog table `events_raw`
-    * (ANALYZE'd like the rest) plus temp view `events` projecting the
+    * (ANALYZE'd like the rest) plus view `events` projecting the
     * normalized `ts` over it — Catalyst's ProjectEstimation propagates the
     * raw table's row count and per-column stats through the aliasing
     * projection, so CBO sees events joins like any other table's. */
-  private def registerOne(spark: SparkSession, sfDir: String, n: String): Unit = {
-    val table = if (n == "events") "events_raw" else n
-    // a leftover temp view of the same name would shadow the catalog
-    // table (and its statistics) — make the catalog entry canonical; for
-    // events, drop the derived view FIRST so a failure below leaves no
-    // stale view silently answering with a previous directory's data
-    if (n == "events") spark.catalog.dropTempView(n): Unit
-    spark.catalog.dropTempView(table): Unit
+  private def registerOne(spark: SparkSession, db: String, sfDir: String,
+      n: String): Unit = {
+    val table = s"$db.${if (n == "events") "events_raw" else n}"
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    // LOCATION resolves RELATIVE paths against the warehouse dir, not
-    // the process CWD — a relative sfDir (e.g. the scale rungs under
-    // tools/) would register ten empty tables and fail every SQL query
-    // with UNABLE_TO_INFER_SCHEMA while the DataFrame path reads the
-    // same directory fine. Qualify it once here.
-    val loc = new java.io.File(s"$sfDir/$n.parquet")
-      .getAbsoluteFile.toURI.toString
+    val loc = new java.io.File(s"${absolute(sfDir)}/$n.parquet").toURI
     spark.sql(s"CREATE TABLE $table USING parquet LOCATION '$loc'")
     // FOR ALL COLUMNS refuses tables with any non-analyzable column
     // (embeddings carries ARRAY<FLOAT>), so enumerate the supported
     // ones; the bare form still records the row count either way
-    val cols = spark.table(table).schema.fields.collect {
+    val fields = spark.table(table).schema.fields
+    val cols = fields.collect {
       case f if analyzable(f.dataType) => s"`${f.name}`"
     }
     if (cols.isEmpty) spark.sql(s"ANALYZE TABLE $table COMPUTE STATISTICS")
     else spark.sql(s"ANALYZE TABLE $table COMPUTE STATISTICS " +
       s"FOR COLUMNS ${cols.mkString(", ")}")
-    if (n == "events")
-      normalizeTs(spark.table(table)).createOrReplaceTempView(n)
+    if (n == "events") {
+      val proj = fields.map(f =>
+        if (f.name == "ts") s"${tsSql(f.dataType)} AS ts" else s"`${f.name}`")
+      spark.sql(s"CREATE OR REPLACE VIEW $db.events AS " +
+        s"SELECT ${proj.mkString(", ")} FROM $table")
+    }
   }
 
-  /** Per-table registration is failure-isolated: one table with a broken
-    * path or an unreadable encoding must not take down queries that never
-    * reference it (the reference has the same property — each table is
-    * opened lazily at scan creation, `RandomInitialPlan.java:76-89`). A
-    * failed table is left unregistered, so a query that *does* reference it
-    * fails loudly at analysis with TABLE_OR_VIEW_NOT_FOUND. Returns the
-    * names that failed with their causes, in `tables` order.
+  /** Register `tables` of `sfDir` in its [[database]], created under
+    * `spark.sql.warehouse.dir` if needed. Per-table registration is
+    * failure-isolated: one table with a broken path or an unreadable
+    * encoding must not take down queries that never reference it (the
+    * reference has the same property — each table is opened lazily at
+    * scan creation, `RandomInitialPlan.java:76-89`). A failed table is
+    * left unregistered, so a query that *does* reference it fails loudly
+    * at analysis with TABLE_OR_VIEW_NOT_FOUND. Returns the names that
+    * failed with their causes, in `tables` order.
     *
     * The tables register concurrently on up to `defaultParallelism`
     * threads (one core or one table: one thread), overlapping their
@@ -235,14 +251,20 @@ object Tables {
     * it. */
   def registerSome(spark: SparkSession, sfDir: String,
       tables: Seq[String]): Seq[(String, Exception)] = {
+    val db = database(sfDir)
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
     def attempt(n: String): Option[(String, Exception)] =
-      try { registerOne(spark, sfDir, n); None }
+      try { registerOne(spark, db, sfDir, n); None }
       catch { case e: Exception =>
         System.err.println(
           s"[graft] registration of table '$n' failed (queries over it " +
           s"will not resolve): ${e.getMessage}")
         // drop any half-registered state so resolution fails cleanly
-        unregister(spark, n)
+        try {
+          if (n == "events") spark.sql(s"DROP VIEW IF EXISTS $db.events")
+          val table = if (n == "events") "events_raw" else n
+          spark.sql(s"DROP TABLE IF EXISTS $db.$table")
+        } catch { case _: Exception => () }
         Some(n -> e)
       }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -260,30 +282,4 @@ object Tables {
         java.util.concurrent.TimeUnit.NANOSECONDS): Unit
     }
   }
-
-  /** Drop table `n`'s catalog registration (table + any derived view),
-    * swallowing errors — used for failure cleanup and for clearing a
-    * previous directory's registrations on a directory switch. */
-  private[graft] def unregister(spark: SparkSession, n: String): Unit =
-    try {
-      spark.catalog.dropTempView(n): Unit
-      spark.sql(
-        s"DROP TABLE IF EXISTS ${if (n == "events") "events_raw" else n}"): Unit
-    } catch { case _: Exception => () }
-
-  /** Register every table; throws only if *every* table failed (a wrong
-    * sfDir). */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    requireAny(sfDir, registerSome(spark, sfDir, names))
-
-  /** Registration's all-or-nothing check, shared with
-    * `SparkSqlRunner.ensureRegistered`: `failures` covering every table
-    * means a wrong `sfDir`, so throw with the first cause; a partial
-    * failure stays with the per-table diagnostics. */
-  private[graft] def requireAny(sfDir: String,
-      failures: Seq[(String, Exception)]): Unit =
-    if (failures.size == names.size)
-      throw new IllegalStateException(
-        s"every table failed to register from $sfDir — first cause: " +
-          failures.head._2.getMessage, failures.head._2)
 }

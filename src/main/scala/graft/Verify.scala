@@ -14,7 +14,7 @@ object Verify {
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val spark = Session.local()
     // catalog build at session setup: CREATE + ANALYZE all tables is
-    // per-(session, directory) metadata work — the production shape runs
+    // per-(SparkContext, directory) metadata work — the production shape runs
     // it at corpus publication, not inside whichever SQL query happens
     // to run first (r17's sweep billed all ten tables' ANALYZE to s24).
     // Failure here is non-fatal: queries register lazily per referenced

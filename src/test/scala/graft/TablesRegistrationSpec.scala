@@ -16,7 +16,8 @@ class TablesRegistrationSpec extends SparkSpec {
   private def catalogStats(): Map[String, Option[CatalogStatistics]] =
     Tables.names.map { n =>
       val table = if (n == "events") "events_raw" else n
-      n -> spark.sessionState.catalog.getTableMetadata(TableIdentifier(table)).stats
+      val id = TableIdentifier(table, Some(Tables.database(sf)))
+      n -> spark.sessionState.catalog.getTableMetadata(id).stats
     }.toMap
 
   test("concurrent registration records the statistics one-at-a-time " +
@@ -73,10 +74,10 @@ class TablesRegistrationSpec extends SparkSpec {
     caller.join()
     assert(thrown.exists(_.isInstanceOf[InterruptedException]), thrown)
     // a worker still running after the throw would go on to CREATE,
-    // ANALYZE or (interrupted) unregister its table later
+    // ANALYZE or (interrupted) drop its table later
     def catalog() = {
       val c = spark.sessionState.catalog
-      c.listTables("default").map(id =>
+      c.listTables(Tables.database(sf)).map(id =>
         id.table -> c.getTempViewOrPermanentTableMetadata(id).stats).toMap
     }
     val left = catalog()

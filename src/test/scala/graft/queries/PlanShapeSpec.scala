@@ -244,7 +244,7 @@ class PlanShapeSpec extends SparkSpec {
     // exists to fix exactly this (RandomOptimizer.java:126-216, cost from
     // .stat files); our analogue is CostBasedJoinReorder over ANALYZE
     // TABLE stats, enabled in Session.local() and fed by
-    // Tables.registerAll. With CBO off the optimized plan keeps the
+    // SparkSqlRunner's registration. With CBO off the optimized plan keeps the
     // syntactic order; with CBO on it must differ — and return the same
     // answer.
     val sql =
@@ -612,7 +612,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("the events view inherits CBO stats through its normalizing projection") {
-    // events is a temp view projecting Tables.normalizeTs over the
+    // events is a view projecting Tables.normalizeTs's `ts` over the
     // events_raw catalog table; ProjectEstimation must carry the raw
     // table's row count and column stats through, so events joins are
     // CBO-visible like any other table's (VERDICT r8 item 7).

@@ -1,5 +1,7 @@
 package graft.sql
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
@@ -33,22 +35,19 @@ class SparkSqlRunnerSpec extends SparkSpec {
       "SELECT p_partkey FROM Part JOIN LINEITEM ON p_partkey = l_partkey " +
         "WHERE p_name LIKE '%PARTITION%'") == Seq("part", "lineitem"))
     assert(SparkSqlRunner.referencedTables("SELECT 1").isEmpty)
-    // a statement touching one table registers only what it names: drive
-    // a session with a fresh runner memo and observe the shared catalog
-    // (newSession shares it, so clear the sentinel first and restore all
-    // registrations after)
+    // a statement touching one table registers only what it names: a
+    // directory of its own starts with an empty database
+    val dir = linkedCopy("graft-lazy-sfdir")
+    val db = Tables.database(dir)
     val s2 = spark.newSession()
-    try {
-      Tables.unregister(s2, "supplier")
-      assert(SparkSqlRunner.run(s2, sf, "SELECT count(*) AS n FROM region")
-        .collect()(0).getLong(0) > 0)
-      assert(s2.catalog.tableExists("region"))
-      assert(!s2.catalog.tableExists("supplier"))
-      // the events view rides its raw table's registration
-      assert(SparkSqlRunner.run(s2, sf,
-        "SELECT count(*) AS n FROM events").collect()(0).getLong(0) > 0)
-      assert(s2.catalog.tableExists("events_raw"))
-    } finally Tables.registerAll(spark, sf)
+    assert(SparkSqlRunner.run(s2, dir, "SELECT count(*) AS n FROM region")
+      .collect()(0).getLong(0) > 0)
+    assert(s2.catalog.tableExists(db, "region"))
+    assert(!s2.catalog.tableExists(db, "supplier"))
+    // the events view rides its raw table's registration
+    assert(SparkSqlRunner.run(s2, dir,
+      "SELECT count(*) AS n FROM events").collect()(0).getLong(0) > 0)
+    assert(s2.catalog.tableExists(db, "events_raw"))
   }
 
   test("the registered events view carries a usable timestamp, not raw nanos") {
@@ -58,32 +57,35 @@ class SparkSqlRunnerSpec extends SparkSpec {
   }
 
   test("one broken table does not take down queries that never touch it") {
-    // round 8 regression: a single events-view failure inside registerAll
+    // round 8 regression: a single events-view failure inside registration
     // darked all 38 SQL-front-end queries. Registration must be isolated
     // per table (the reference opens each table lazily at scan creation,
     // RandomInitialPlan.java:76-89, and has exactly this property).
-    import java.nio.file.{Files, Paths}
-    val tmp = Files.createTempDirectory("graft-broken-sfdir")
-    Tables.names.filterNot(_ == "events").foreach { t =>
+    val dir = linkedCopy("graft-broken-sfdir", except = "events")
+    Files.writeString(
+      Paths.get(dir, "events.parquet"), "this is not parquet"): Unit
+    val s2 = spark.newSession()
+    SparkSqlRunner.ensureRegistered(s2, dir)
+    // untouched tables still answer (this is s04_sql_join2's shape)
+    val n = s2.sql(
+      """SELECT count(*) AS n FROM nation
+        |JOIN customer ON n_nationkey = c_nationkey""".stripMargin)
+      .collect()(0).getLong(0)
+    assert(n > 0)
+    // the broken table fails loudly at analysis, not silently-stale
+    intercept[org.apache.spark.sql.AnalysisException] {
+      s2.sql("SELECT * FROM events LIMIT 1").collect()
+    }
+  }
+
+  /** A directory of its own: `sf`'s tables (but `except`) symlinked into a
+    * new temporary directory, so it gets its own catalog database. */
+  private def linkedCopy(prefix: String, except: String = ""): String = {
+    val tmp = Files.createTempDirectory(prefix)
+    Tables.names.filterNot(_ == except).foreach { t =>
       Files.createSymbolicLink(
         tmp.resolve(s"$t.parquet"), Paths.get(s"$sf/$t.parquet")): Unit
     }
-    Files.writeString(tmp.resolve("events.parquet"), "this is not parquet"): Unit
-    try {
-      Tables.registerAll(spark, tmp.toString)
-      // untouched tables still answer (this is s04_sql_join2's shape)
-      val n = spark.sql(
-        """SELECT count(*) AS n FROM nation
-          |JOIN customer ON n_nationkey = c_nationkey""".stripMargin)
-        .collect()(0).getLong(0)
-      assert(n > 0)
-      // the broken table fails loudly at analysis, not silently-stale
-      intercept[org.apache.spark.sql.AnalysisException] {
-        spark.sql("SELECT * FROM events LIMIT 1").collect()
-      }
-    } finally {
-      // restore the suite's canonical catalog for later tests
-      Tables.registerAll(spark, sf)
-    }
+    tmp.toString
   }
 }
