@@ -43,9 +43,10 @@ object Session {
       // cost-based join reorder over ANALYZE TABLE stats — the Catalyst
       // analogue of the reference's randomized join-order search over
       // .stat files (RandomOptimizer.java:126-216, PlanCost.java:123-189);
-      // stats are collected once per (SparkContext, directory, table),
-      // in the directory's own catalog database (Tables.registerSome via
-      // SparkSqlRunner), and plans without stats are untouched
+      // stats are collected once per data version of each table and
+      // stored under the directory's own catalog database, which every
+      // later JVM registers them from (Tables.registerSome via
+      // SparkSqlRunner); plans without stats are untouched
       .config("spark.sql.cbo.enabled", "true")
       .config("spark.sql.cbo.joinReorder.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")

@@ -166,6 +166,11 @@ object Tables {
     }
   }
 
+  /** The columns of `schema` that registration analyzes, in schema order. */
+  private[graft] def analyzedColumns(
+      schema: org.apache.spark.sql.types.StructType): Seq[String] =
+    schema.fields.toSeq.collect { case f if analyzable(f.dataType) => f.name }
+
   /** The catalog database holding `sfDir`'s tables, named from its
     * normalized absolute path so `d` and `d/` share one. */
   def database(sfDir: String): String = {
@@ -185,19 +190,23 @@ object Tables {
   /** Register one table in database `db` so `spark.sql` / the mini-SQL
     * front end can resolve its name, with the statistics the cost-based
     * optimizer reorders joins with (the Catalyst counterpart of the
-    * reference's `.stat` files, `RandomOptimizer.java:126-216`).
+    * reference's `.stat` files, `RandomOptimizer.java:126-216`). Returns
+    * whether the statistics came from [[StoredStatistics]].
     *
     * The table becomes an EXTERNAL catalog table over the parquet
-    * location, followed by `ANALYZE TABLE … COMPUTE STATISTICS FOR
-    * COLUMNS` over its `analyzable` columns: row counts + per-column
-    * NDV/min/max live in the catalog, which is what
-    * `CostBasedJoinReorder` needs on every join input (a temp view over
-    * a bare parquet read exposes only sizeInBytes, and CBO stays inert).
-    * The ANALYZE scan is a one-time cost per (SparkContext, directory,
-    * table) — [[graft.sql.SparkSqlRunner]] records registration. Every
-    * name is qualified with `db`: [[registerSome]] runs this for several
-    * tables at once on its own threads, so it touches only table `n`'s
-    * own catalog entries and no session's current database.
+    * location, carrying row counts + per-column NDV/min/max from `ANALYZE
+    * TABLE … COMPUTE STATISTICS FOR COLUMNS` over its `analyzable` columns,
+    * which is what `CostBasedJoinReorder` needs on every join input (a temp
+    * view over a bare parquet read exposes only sizeInBytes, and CBO stays
+    * inert). ANALYZE runs once per data version: when the store holds the
+    * schema and statistics of exactly these files (and statistics confs),
+    * the table is created from the stored schema — no inference job — and
+    * given the stored statistics, so registering launches no Spark job.
+    * Otherwise CREATE infers the schema, ANALYZE scans the table, and the
+    * result is stored for the next JVM. Every name is qualified with `db`:
+    * [[registerSome]] runs this for several tables at once on its own
+    * threads, so it touches only table `n`'s own catalog entries and no
+    * session's current database.
     *
     * `events` needs a normalization expression a catalog table cannot
     * carry (normalizeTs), so it is registered as catalog table `events_raw`
@@ -206,27 +215,43 @@ object Tables {
     * raw table's row count and per-column stats through the aliasing
     * projection, so CBO sees events joins like any other table's. */
   private def registerOne(spark: SparkSession, db: String, sfDir: String,
-      n: String): Unit = {
-    val table = s"$db.${if (n == "events") "events_raw" else n}"
-    spark.sql(s"DROP TABLE IF EXISTS $table")
+      n: String): Boolean = {
+    val name = if (n == "events") "events_raw" else n
+    val table = s"$db.$name"
+    val id = org.apache.spark.sql.catalyst.TableIdentifier(name, Some(db))
+    val catalog = spark.sessionState.catalog
     val loc = new java.io.File(s"${absolute(sfDir)}/$n.parquet").toURI
-    spark.sql(s"CREATE TABLE $table USING parquet LOCATION '$loc'")
-    // FOR ALL COLUMNS refuses tables with any non-analyzable column
-    // (embeddings carries ARRAY<FLOAT>), so enumerate the supported
-    // ones; the bare form still records the row count either way
-    val fields = spark.table(table).schema.fields
-    val cols = fields.collect {
-      case f if analyzable(f.dataType) => s"`${f.name}`"
+    val store = for (f <- StoredStatistics.file(spark, db, name);
+        v <- StoredStatistics.version(spark, loc.toString)) yield (f, v)
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    val stored = for ((f, v) <- store;
+        (schema, stats) <- StoredStatistics.read(f, v)) yield {
+      spark.sql(s"CREATE TABLE $table (${schema.toDDL}) USING parquet " +
+        s"LOCATION '$loc'")
+      catalog.alterTableStats(id, Some(stats))
+      schema
     }
-    if (cols.isEmpty) spark.sql(s"ANALYZE TABLE $table COMPUTE STATISTICS")
-    else spark.sql(s"ANALYZE TABLE $table COMPUTE STATISTICS " +
-      s"FOR COLUMNS ${cols.mkString(", ")}")
+    val schema = stored.getOrElse {
+      spark.sql(s"CREATE TABLE $table USING parquet LOCATION '$loc'")
+      // FOR ALL COLUMNS refuses tables with any non-analyzable column
+      // (embeddings carries ARRAY<FLOAT>), so enumerate the supported
+      // ones; the bare form still records the row count either way
+      val schema = catalog.getTableMetadata(id).schema
+      val cols = analyzedColumns(schema).map(c => s"`$c`")
+      if (cols.isEmpty) spark.sql(s"ANALYZE TABLE $table COMPUTE STATISTICS")
+      else spark.sql(s"ANALYZE TABLE $table COMPUTE STATISTICS " +
+        s"FOR COLUMNS ${cols.mkString(", ")}")
+      for ((f, v) <- store; stats <- catalog.getTableMetadata(id).stats)
+        StoredStatistics.write(f, v, schema, stats)
+      schema
+    }
     if (n == "events") {
-      val proj = fields.map(f =>
+      val proj = schema.fields.map(f =>
         if (f.name == "ts") s"${tsSql(f.dataType)} AS ts" else s"`${f.name}`")
       spark.sql(s"CREATE OR REPLACE VIEW $db.events AS " +
         s"SELECT ${proj.mkString(", ")} FROM $table")
     }
+    stored.isDefined
   }
 
   /** Register `tables` of `sfDir` in its [[database]], created under
@@ -237,10 +262,15 @@ object Tables {
     * scan creation, `RandomInitialPlan.java:76-89`). A failed table is
     * left unregistered, so a query that *does* reference it fails loudly
     * at analysis with TABLE_OR_VIEW_NOT_FOUND. Returns the names that
-    * failed with their causes, in `tables` order.
+    * failed with their causes, in `tables` order, and prints one stderr
+    * line counting the tables registered from stored statistics, analyzed
+    * and failed, so a run's log shows which path it paid for.
     *
-    * The tables register concurrently on up to `defaultParallelism`
-    * threads (one core or one table: one thread), overlapping their
+    * Each table is analyzed only when the store holds no statistics for
+    * its current data version (see [[registerOne]]); otherwise it
+    * registers from the store and launches no job. The tables register
+    * concurrently on up to `defaultParallelism` threads (one core or one
+    * table: one thread), overlapping their
     * ANALYZE scans and Janino compiles: cold sf0.01 registration of all ten
     * on 4 vCPU, median 14.9 s serial vs 11.9 s concurrent (PLANS.md
     * "Catalog registration made concurrent"). The pool is made per call
@@ -253,8 +283,8 @@ object Tables {
       tables: Seq[String]): Seq[(String, Exception)] = {
     val db = database(sfDir)
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
-    def attempt(n: String): Option[(String, Exception)] =
-      try { registerOne(spark, db, sfDir, n); None }
+    def attempt(n: String): Either[(String, Exception), Boolean] =
+      try Right(registerOne(spark, db, sfDir, n))
       catch { case e: Exception =>
         System.err.println(
           s"[graft] registration of table '$n' failed (queries over it " +
@@ -265,11 +295,11 @@ object Tables {
           val table = if (n == "events") "events_raw" else n
           spark.sql(s"DROP TABLE IF EXISTS $db.$table")
         } catch { case _: Exception => () }
-        Some(n -> e)
+        Left(n -> e)
       }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, math.min(tables.size, spark.sparkContext.defaultParallelism)))
-    try tables.map(n => pool.submit(() => attempt(n))).flatMap { f =>
+    val done = try tables.map(n => pool.submit(() => attempt(n))).map { f =>
       try f.get()
       catch { case e: java.util.concurrent.ExecutionException =>
         throw e.getCause } // an Error: `attempt` keeps every Exception
@@ -281,5 +311,11 @@ object Tables {
       pool.awaitTermination(Long.MaxValue,
         java.util.concurrent.TimeUnit.NANOSECONDS): Unit
     }
+    val failed = done.collect { case Left(f) => f }
+    val stored = done.count(_ == Right(true))
+    System.err.println(s"[graft] tables of $sfDir in $db: $stored from " +
+      s"stored statistics, ${done.size - stored - failed.size} analyzed, " +
+      s"${failed.size} failed")
+    failed
   }
 }

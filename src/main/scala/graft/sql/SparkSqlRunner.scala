@@ -11,10 +11,12 @@ import graft.Tables
   * never the whole catalog (r17 billed all ten tables' registration to
   * whichever query ran first, VERDICT r17 §next-round #4), each once per
   * (SparkContext, directory, table) in the directory's own database
-  * (`Tables.database`). The catalog belongs to the SparkContext; a session
-  * only points its current database at the directory it reads, so a new
-  * session registers nothing, and sessions over two directories each see
-  * their own rows and statistics.
+  * (`Tables.database`). ANALYZE itself runs once per data version: a
+  * registration of unchanged files reads the schema and statistics stored
+  * under that database and launches no job. The catalog belongs to the
+  * SparkContext; a session only points its current database at the
+  * directory it reads, so a new session registers nothing, and sessions
+  * over two directories each see their own rows and statistics.
   */
 object SparkSqlRunner {
   // the tables attempted per (SparkContext, database) — failed attempts

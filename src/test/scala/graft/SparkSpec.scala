@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimitedTests}
 import org.scalatest.funsuite.AnyFunSuite
@@ -47,6 +49,37 @@ object SparkSpec {
 abstract class SparkSpec extends AnyFunSuite with TimeLimitedTests {
   val spark: SparkSession = SparkSpec.spark
   def sf: String = SparkSpec.Sf
+
+  /** Run `body` on a directory of its own: `sf`'s tables (but `except`)
+    * symlinked into a new temporary directory, so it gets its own catalog
+    * database and an empty statistics store; [[removeDirectory]] after. */
+  def withLinkedCopy[T](prefix: String, except: String = "")(
+      body: String => T): T = {
+    val tmp = Files.createTempDirectory(prefix)
+    Tables.names.filterNot(_ == except).foreach { t =>
+      Files.createSymbolicLink(
+        tmp.resolve(s"$t.parquet"), Paths.get(s"$sf/$t.parquet")): Unit
+    }
+    try body(tmp.toString) finally removeDirectory(tmp.toString)
+  }
+
+  /** Drop `dir`'s catalog database, with its statistics store, and delete
+    * `dir` (symbolic links, not their targets). The database directory
+    * must then be gone from the warehouse: a suite that makes directories
+    * of its own leaves no `graft_*.db` entry behind. */
+  def removeDirectory(dir: String): Unit = {
+    val db = Tables.database(dir)
+    if (spark.catalog.currentDatabase == db)
+      spark.catalog.setCurrentDatabase("default")
+    spark.newSession().sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+    Files.walk(Paths.get(dir)).sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => Files.delete(p))
+    val warehouse = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath
+    assert(!Files.exists(Paths.get(warehouse, s"$db.db")),
+      s"$db.db left in $warehouse")
+  }
+
   // Slowest legitimate tests (sf0.01 integration sizings) run ~2 min
   // on a loaded host; 8 min flags only true stalls.
   override val timeLimit: Span = Span(8, Minutes)

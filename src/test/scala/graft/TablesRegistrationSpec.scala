@@ -10,29 +10,35 @@ import org.apache.spark.sql.graftbridge.ListenerBridge
 /** `Tables.registerSome` registers a batch of tables concurrently; these
   * pin what the concurrency must not change: the statistics CBO costs
   * joins with, the caller's job group on every job it launches, and that
-  * nothing it started still runs once it has returned or thrown. */
+  * nothing it started still runs once it has returned or thrown. Each test
+  * registers a fresh linked copy of `sf`, whose new database starts with
+  * an empty statistics store, so every table runs CREATE + ANALYZE. */
 class TablesRegistrationSpec extends SparkSpec {
 
-  private def catalogStats(): Map[String, Option[CatalogStatistics]] =
+  private def catalogStats(
+      dir: String): Map[String, Option[CatalogStatistics]] =
     Tables.names.map { n =>
       val table = if (n == "events") "events_raw" else n
-      val id = TableIdentifier(table, Some(Tables.database(sf)))
+      val id = TableIdentifier(table, Some(Tables.database(dir)))
       n -> spark.sessionState.catalog.getTableMetadata(id).stats
     }.toMap
 
   test("concurrent registration records the statistics one-at-a-time " +
       "registration records") {
-    assert(Tables.registerSome(spark, sf, Tables.names).isEmpty)
-    val together = catalogStats()
-    Tables.names.foreach(n =>
-      assert(Tables.registerSome(spark, sf, Seq(n)).isEmpty, n))
-    val alone = catalogStats()
-    Tables.names.foreach { n =>
-      val st = together(n).getOrElse(fail(s"$n has no statistics"))
-      assert(st.rowCount.exists(_ > 0) && st.colStats.nonEmpty, n)
-      // sizeInBytes, rowCount and every column's distinctCount, min, max,
-      // nullCount, avgLen and maxLen
-      assert(together(n) == alone(n), n)
+    withLinkedCopy("graft-together-sfdir") { together =>
+      withLinkedCopy("graft-alone-sfdir") { alone =>
+        assert(Tables.registerSome(spark, together, Tables.names).isEmpty)
+        Tables.names.foreach(n =>
+          assert(Tables.registerSome(spark, alone, Seq(n)).isEmpty, n))
+        val (t, a) = (catalogStats(together), catalogStats(alone))
+        Tables.names.foreach { n =>
+          val st = t(n).getOrElse(fail(s"$n has no statistics"))
+          assert(st.rowCount.exists(_ > 0) && st.colStats.nonEmpty, n)
+          // sizeInBytes, rowCount and every column's distinctCount, min,
+          // max, nullCount, avgLen and maxLen
+          assert(t(n) == a(n), n)
+        }
+      }
     }
   }
 
@@ -46,14 +52,16 @@ class TablesRegistrationSpec extends SparkSpec {
             Option(p.getProperty("spark.jobGroup.id")))
         }
     }
-    ListenerBridge.drain(sc)
-    sc.addSparkListener(listener)
-    sc.setJobGroup("graft-registration-spec", "registration")
-    try assert(Tables.registerSome(spark, sf, Tables.names).isEmpty)
-    finally {
-      sc.clearJobGroup()
+    withLinkedCopy("graft-jobgroup-sfdir") { dir =>
       ListenerBridge.drain(sc)
-      sc.removeSparkListener(listener)
+      sc.addSparkListener(listener)
+      sc.setJobGroup("graft-registration-spec", "registration")
+      try assert(Tables.registerSome(spark, dir, Tables.names).isEmpty)
+      finally {
+        sc.clearJobGroup()
+        ListenerBridge.drain(sc)
+        sc.removeSparkListener(listener)
+      }
     }
     val seen = groups.synchronized(groups.toList)
     // at least one ANALYZE job per table
@@ -62,28 +70,35 @@ class TablesRegistrationSpec extends SparkSpec {
   }
 
   test("an interrupted registration stops its other tables before it throws") {
-    @volatile var thrown: Option[Throwable] = None
-    // interrupted before the call: its first wait on a table throws while
-    // the pool's workers have just started
-    val caller = new Thread(() => {
-      Thread.currentThread.interrupt()
-      try Tables.registerSome(spark, sf, Tables.names): Unit
-      catch { case t: Throwable => thrown = Some(t) }
-    })
-    caller.start()
-    caller.join()
-    assert(thrown.exists(_.isInstanceOf[InterruptedException]), thrown)
-    // a worker still running after the throw would go on to CREATE,
-    // ANALYZE or (interrupted) drop its table later
-    def catalog() = {
-      val c = spark.sessionState.catalog
-      c.listTables(Tables.database(sf)).map(id =>
-        id.table -> c.getTempViewOrPermanentTableMetadata(id).stats).toMap
+    withLinkedCopy("graft-interrupt-sfdir") { dir =>
+      // the directory's database exists, as after any earlier registration:
+      // creating it posts a catalog event, and an interrupted caller loses
+      // its interrupt there (Spark logs "Interrupted while posting" and
+      // drops that listener), so the call would never reach its first wait
+      spark.sql(s"CREATE DATABASE IF NOT EXISTS ${Tables.database(dir)}")
+      @volatile var thrown: Option[Throwable] = None
+      // interrupted before the call: its first wait on a table throws while
+      // the pool's workers have just started
+      val caller = new Thread(() => {
+        Thread.currentThread.interrupt()
+        try Tables.registerSome(spark, dir, Tables.names): Unit
+        catch { case t: Throwable => thrown = Some(t) }
+      })
+      caller.start()
+      caller.join()
+      assert(thrown.exists(_.isInstanceOf[InterruptedException]), thrown)
+      // a worker still running after the throw would go on to CREATE,
+      // ANALYZE or (interrupted) drop its table later
+      def catalog() = {
+        val c = spark.sessionState.catalog
+        c.listTables(Tables.database(dir)).map(id =>
+          id.table -> c.getTempViewOrPermanentTableMetadata(id).stats).toMap
+      }
+      val left = catalog()
+      Thread.sleep(2000)
+      assert(catalog() == left)
+      assert(Tables.registerSome(spark, dir, Tables.names).isEmpty)
+      assert(catalogStats(dir).values.forall(_.exists(_.rowCount.isDefined)))
     }
-    val left = catalog()
-    Thread.sleep(2000)
-    assert(catalog() == left)
-    assert(Tables.registerSome(spark, sf, Tables.names).isEmpty)
-    assert(catalogStats().values.forall(_.exists(_.rowCount.isDefined)))
   }
 }

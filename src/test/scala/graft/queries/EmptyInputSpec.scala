@@ -2,6 +2,8 @@ package graft.queries
 
 import java.nio.file.Files
 
+import org.scalatest.BeforeAndAfterAll
+
 import graft.{SparkSpec, Tables}
 
 /** Graceful-degradation contract: every operator must run (not crash)
@@ -22,7 +24,10 @@ object EmptyInputSpec {
   }
 }
 
-class EmptyInputSpec extends SparkSpec {
+class EmptyInputSpec extends SparkSpec with BeforeAndAfterAll {
+
+  override def afterAll(): Unit =
+    try removeDirectory(EmptyInputSpec.dir) finally super.afterAll()
 
   // representative slice of every operator family: dedup, LSH, ANN,
   // quantized, text, events, windows, joins, sketches, SQL front ends

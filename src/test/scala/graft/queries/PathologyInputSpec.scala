@@ -2,6 +2,8 @@ package graft.queries
 
 import java.nio.file.Files
 
+import org.scalatest.BeforeAndAfterAll
+
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
@@ -43,7 +45,10 @@ object PathologyInputSpec {
   }
 }
 
-class PathologyInputSpec extends SparkSpec {
+class PathologyInputSpec extends SparkSpec with BeforeAndAfterAll {
+
+  override def afterAll(): Unit =
+    try removeDirectory(PathologyInputSpec.dir) finally super.afterAll()
 
   Pipeline.queries.toSeq.sortBy(_._1).foreach { case (name, q) =>
     test(s"$name survives pathological content") {

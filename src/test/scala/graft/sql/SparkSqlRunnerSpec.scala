@@ -37,17 +37,18 @@ class SparkSqlRunnerSpec extends SparkSpec {
     assert(SparkSqlRunner.referencedTables("SELECT 1").isEmpty)
     // a statement touching one table registers only what it names: a
     // directory of its own starts with an empty database
-    val dir = linkedCopy("graft-lazy-sfdir")
-    val db = Tables.database(dir)
-    val s2 = spark.newSession()
-    assert(SparkSqlRunner.run(s2, dir, "SELECT count(*) AS n FROM region")
-      .collect()(0).getLong(0) > 0)
-    assert(s2.catalog.tableExists(db, "region"))
-    assert(!s2.catalog.tableExists(db, "supplier"))
-    // the events view rides its raw table's registration
-    assert(SparkSqlRunner.run(s2, dir,
-      "SELECT count(*) AS n FROM events").collect()(0).getLong(0) > 0)
-    assert(s2.catalog.tableExists(db, "events_raw"))
+    withLinkedCopy("graft-lazy-sfdir") { dir =>
+      val db = Tables.database(dir)
+      val s2 = spark.newSession()
+      assert(SparkSqlRunner.run(s2, dir, "SELECT count(*) AS n FROM region")
+        .collect()(0).getLong(0) > 0)
+      assert(s2.catalog.tableExists(db, "region"))
+      assert(!s2.catalog.tableExists(db, "supplier"))
+      // the events view rides its raw table's registration
+      assert(SparkSqlRunner.run(s2, dir,
+        "SELECT count(*) AS n FROM events").collect()(0).getLong(0) > 0)
+      assert(s2.catalog.tableExists(db, "events_raw"))
+    }
   }
 
   test("the registered events view carries a usable timestamp, not raw nanos") {
@@ -61,31 +62,21 @@ class SparkSqlRunnerSpec extends SparkSpec {
     // darked all 38 SQL-front-end queries. Registration must be isolated
     // per table (the reference opens each table lazily at scan creation,
     // RandomInitialPlan.java:76-89, and has exactly this property).
-    val dir = linkedCopy("graft-broken-sfdir", except = "events")
-    Files.writeString(
-      Paths.get(dir, "events.parquet"), "this is not parquet"): Unit
-    val s2 = spark.newSession()
-    SparkSqlRunner.ensureRegistered(s2, dir)
-    // untouched tables still answer (this is s04_sql_join2's shape)
-    val n = s2.sql(
-      """SELECT count(*) AS n FROM nation
-        |JOIN customer ON n_nationkey = c_nationkey""".stripMargin)
-      .collect()(0).getLong(0)
-    assert(n > 0)
-    // the broken table fails loudly at analysis, not silently-stale
-    intercept[org.apache.spark.sql.AnalysisException] {
-      s2.sql("SELECT * FROM events LIMIT 1").collect()
+    withLinkedCopy("graft-broken-sfdir", except = "events") { dir =>
+      Files.writeString(
+        Paths.get(dir, "events.parquet"), "this is not parquet"): Unit
+      val s2 = spark.newSession()
+      SparkSqlRunner.ensureRegistered(s2, dir)
+      // untouched tables still answer (this is s04_sql_join2's shape)
+      val n = s2.sql(
+        """SELECT count(*) AS n FROM nation
+          |JOIN customer ON n_nationkey = c_nationkey""".stripMargin)
+        .collect()(0).getLong(0)
+      assert(n > 0)
+      // the broken table fails loudly at analysis, not silently-stale
+      intercept[org.apache.spark.sql.AnalysisException] {
+        s2.sql("SELECT * FROM events LIMIT 1").collect()
+      }
     }
-  }
-
-  /** A directory of its own: `sf`'s tables (but `except`) symlinked into a
-    * new temporary directory, so it gets its own catalog database. */
-  private def linkedCopy(prefix: String, except: String = ""): String = {
-    val tmp = Files.createTempDirectory(prefix)
-    Tables.names.filterNot(_ == except).foreach { t =>
-      Files.createSymbolicLink(
-        tmp.resolve(s"$t.parquet"), Paths.get(s"$sf/$t.parquet")): Unit
-    }
-    tmp.toString
   }
 }
