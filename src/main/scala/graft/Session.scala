@@ -57,34 +57,4 @@ object Session {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
-
-  /** The CLUSTER-shaped session profile: the runtime confs a
-    * 1000-executor deployment of this engine would run with, applied to
-    * an existing session so plan-shape assertions can be replayed under
-    * it (PlanShapeSpec's cluster-profile fingerprint test). The engine
-    * only ever executes on local[SPARK_GRAFT_CPUS]; this profile is the
-    * cheapest insurance that the plans graded for 100 TB are the ones
-    * Catalyst actually picks under cluster-scale settings, not an
-    * artifact of the core-count-wide local config.
-    *
-    *  - shuffle.partitions 2000: the volume-sized value (~2 per core at
-    *    1000 executors x 2 cores), the knob the scaladoc above defers
-    *    to cluster scale;
-    *  - skew-join splitting ON explicitly (Spark's default, pinned so a
-    *    default change cannot silently drop it);
-    *  - autoBroadcastJoinThreshold at the 10 MB default, pinned
-    *    explicitly for the same reason — broadcast-vs-shuffle choices
-    *    must come from relation sizes, not an inherited override.
-    *
-    * Returns the prior values so a test can restore them. */
-  def applyClusterProfile(spark: SparkSession): Map[String, Option[String]] = {
-    val profile = Map(
-      "spark.sql.shuffle.partitions" -> "2000",
-      "spark.sql.adaptive.skewJoin.enabled" -> "true",
-      "spark.sql.autoBroadcastJoinThreshold" -> "10485760")
-    val prior = profile.keys.map(k =>
-      k -> spark.conf.getOption(k)).toMap
-    profile.foreach { case (k, v) => spark.conf.set(k, v) }
-    prior
-  }
 }

@@ -278,9 +278,17 @@ object Tables {
     * inherit its local properties: a job-group cancel reaches the ANALYZE
     * jobs. Returns only after every table is done — registering in the
     * background would move the cost into the first queries, not remove
-    * it. */
+    * it.
+    *
+    * A caller that is already interrupted gets an InterruptedException
+    * before the first catalog write: Spark's `ExternalCatalogWithListener`
+    * swallows an interrupt that arrives while it posts a catalog event
+    * (CREATE DATABASE, CREATE TABLE) and removes SharedState's
+    * catalog-event listener for the rest of the JVM. */
   def registerSome(spark: SparkSession, sfDir: String,
       tables: Seq[String]): Seq[(String, Exception)] = {
+    if (Thread.interrupted())
+      throw new InterruptedException(s"registration of $sfDir interrupted")
     val db = database(sfDir)
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
     def attempt(n: String): Either[(String, Exception), Boolean] =

@@ -98,10 +98,4 @@ object Portable {
   /** Dot product via a left-to-right fold (deterministic order). */
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-
-  /** Cosine similarity of two double arrays, rounded to 6 decimals so the
-    * last-ULP difference between two engines' summation orders can never
-    * flip a comparison. */
-  def cosine6(a: Column, b: Column): Column =
-    round(dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b))), 6)
 }

@@ -1079,10 +1079,11 @@ trait PipelineDedup extends PipelineVectors {
     * near-dup pair with at least one sampled endpoint, computed by
     * broadcasting the ~250 sample sketches against one corpus scan —
     * |S|×N work, LINEAR in the corpus (the previous proportional
-    * mod-2 sample paid |N/2|² — quadratic, and ScaleProbe measured
-    * p110 riding it to 73 s at a 10× corpus). Anchoring also keeps the
-    * estimator useful: a sampled doc's true near-dups are found
-    * wherever they live in the corpus, so true pairs don't vanish as
+    * mod-2 sample paid |N/2|² — quadratic: p110 rode it to 73 s at a
+    * 10× corpus, PLANS.md "Round-12 (cont.): corpus-scaled codebooks").
+    * Anchoring also keeps the estimator useful: a sampled doc's true
+    * near-dups are found wherever they live in the corpus, so true
+    * pairs don't vanish as
     * the sampling rate drops (both-endpoints-sampled pairs would decay
     * as 1/D²). `found` = the p02 pair-graph artifact restricted to
     * pairs touching the sample. One summary row: true/found/hit

@@ -1014,10 +1014,11 @@ trait PipelineVectors extends PipelineText {
 
 
   /** Corpus-scaled codebook sizing — the fix for the fixed-codebook
-    * stress regime ScaleProbe documented (p94 31.3× / p96 11.2× /
-    * p110 15.1× at a 10× corpus): with a FIXED cell count, cells grow
-    * linearly with the corpus and every within-cell pairwise stage
-    * (p94's SemDeDup prune, p33's kNN graph feeding p96) pays
+    * stress regime measured at a 10× corpus (p94 31.3× / p96 11.2× /
+    * p110 15.1×, PLANS.md "Round-12 (cont.): corpus-scaled codebooks"):
+    * with a FIXED cell count, cells grow linearly with the corpus and
+    * every within-cell pairwise stage (p94's SemDeDup prune, p33's kNN
+    * graph feeding p96) pays
     * Σ|cell|² ∝ N²/K — quadratic. Deriving K from the corpus size with
     * a constant per-cell target keeps |cell| ≈ target, so Σ|cell|² ≈
     * N·target stays LINEAR — the scaling contract those ops' scaladocs

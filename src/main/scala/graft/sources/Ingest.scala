@@ -72,15 +72,4 @@ object Ingest {
       .option("sep", sep)
       .option("header", header.toString)
       .csv(outPath)
-
-  /** Newline-delimited JSON → parquet, the second text source format.
-    * Schema is explicit (like every reference table, §1.3) so malformed
-    * documents fail loudly instead of widening types. */
-  def jsonToParquet(
-      spark: SparkSession,
-      inPath: String,
-      schema: StructType,
-      outPath: String): Unit =
-    spark.read.schema(schema).json(inPath)
-      .write.mode(SaveMode.Overwrite).parquet(outPath)
 }

@@ -9,8 +9,9 @@ import graft.Session
   * above an existing one, so the WHOLE 226-query gate and the bench can
   * run a rung above the driver's largest shipped data (sf0.1 → "sf1.0").
   *
-  * This is deliberately NOT [[ScaleProbe]]'s corpus (which plants 50%
-  * exact/near duplicate copies to stress the dedup families): a real 10×
+  * This is deliberately NOT the corpus behind PLANS.md "Measured
+  * scaling" (which planted 50% exact/near duplicate copies to stress the
+  * dedup families): a real 10×
   * corpus has roughly the SAME duplicate rate, not 10× of it, so here
   * every replica is made disjoint while in-replica structure is kept:
   *
@@ -25,8 +26,8 @@ import graft.Session
   *    is applied uniformly); n_chars is recomputed to stay consistent;
   *  - embeddings replicate with a deterministic per-element hash
   *    perturbation (±0.1), giving genuinely new vectors; one copy of the
-  *    reserved codebook ids (vec_id < 16) is kept, matching ScaleProbe's
-  *    convention for the ops that treat them as centroids;
+  *    reserved codebook ids (vec_id < 16) is kept, matching that
+  *    record's convention for the ops that treat them as centroids;
   *  - events replicate with shifted event ids AND user ids, so per-user
   *    volume (session shape) stays constant while the user space grows.
   *
@@ -128,7 +129,7 @@ object ScaleUp {
     val emb = rd("embeddings")
     val vecStride = strideOf(emb, "vec_id")
     wr(blow(emb, mult)((d, r) => d
-      // one copy of the reserved codebook ids (ScaleProbe's convention)
+      // one copy of the reserved codebook ids (the convention above)
       .filter(r === 0L || col("vec_id") >= 16L)
       .withColumn("vec_id", col("vec_id") + r * vecStride)
       .withColumn("embedding", when(r === 0L, col("embedding")).otherwise(

@@ -28,7 +28,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - every `"graft.<seg>.<key>` string literal in src/test (this file
   *    aside), tools/ or perfbench/src must be read in src/main the same
   *    way — a test or harness that sets a deleted conf silently does
-  *    nothing.
+  *    nothing, and
+  *  - every src/main file is reached from outside itself: it defines a
+  *    `main`, a type it defines is registered under META-INF/services,
+  *    or another src/main file names one of its top-level types —
+  *    library code that only its own specs call is dead weight.
   *
   * It also keeps the suite hermetic: no test source may name an
   * absolute path outside the checkout and the shared test-data root.
@@ -170,6 +174,50 @@ class CitationsSpec extends AnyFunSuite {
     assert(dead.isEmpty,
       "\nconf keys set outside src/main that nothing reads (delete the " +
         "setting or read the key):\n  " + dead.mkString("\n  "))
+  }
+
+  /** `text` with its comments blanked and its string and character
+    * literals kept, so a name that only a comment mentions does not
+    * count as a use. */
+  private def code(text: String): String =
+    """"{3}[\s\S]*?"{3}|"(?:\\.|[^"\\\n])*"|'(?:\\.|[^'\\])'|/\*[\s\S]*?\*/|//[^\n]*""".r
+      .replaceAllIn(text, m =>
+        if (m.matched.startsWith("/")) " "
+        else scala.util.matching.Regex.quoteReplacement(m.matched))
+
+  test("every src/main file has a caller in src/main, a main or a service " +
+      "registration") {
+    // files whose only callers are specs, each with the reason it stays
+    val allowlist = Map(
+      "Streams.scala" -> ("the Structured Streaming twins of batch " +
+        "queries; StreamsSpec and the twin specs drive them"))
+    val services = filesEnding(
+      repoRoot.resolve("src/main/resources/META-INF/services"), "")
+      .filter(Files.isRegularFile(_))
+      .flatMap(p => Files.readAllLines(p).asScala)
+      .map(_.takeWhile(_ != '#').trim).filter(_.nonEmpty).toSet
+    val codes = mainTexts.map { case (p, t) => p -> code(t) }
+    val topLevel = ("""(?m)^(?:(?:private|protected|final|sealed|abstract|""" +
+      """case|implicit)(?:\[\w+\])?\s+)*(?:class|object|trait)\s+(\w+)""").r
+    val unreached = for {
+      (path, text) <- codes
+      if """\bdef\s+main\b""".r.findFirstIn(text).isEmpty
+      pkg = """(?m)^package\s+([\w.]+)""".r.findAllMatchIn(text)
+        .map(_.group(1)).mkString(".")
+      names = topLevel.findAllMatchIn(text).map(_.group(1)).toSet
+      if !names.exists(n => services.contains(s"$pkg.$n"))
+      if !names.exists { n =>
+        val use = s"\\b$n\\b".r
+        codes.exists { case (q, t) => q != path && use.findFirstIn(t).isDefined }
+      }
+      if !allowlist.contains(path.getFileName.toString)
+    } yield s"$path (${names.toSeq.sorted.mkString(", ")})"
+    assert(unreached.isEmpty,
+      "\nsrc/main files nothing in src/main reaches (delete the surface " +
+        "with its specs, or allowlist it with the reason it stays):\n  " +
+        unreached.mkString("\n  "))
+    val stale = allowlist.keySet -- mainTexts.map(_._1.getFileName.toString)
+    assert(stale.isEmpty, s"allowlisted files that no longer exist: $stale")
   }
 
   test("no test source names an absolute path outside the repo and test data") {

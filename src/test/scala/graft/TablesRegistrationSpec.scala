@@ -2,15 +2,17 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.TableIdentifier
-import org.apache.spark.sql.catalyst.catalog.CatalogStatistics
+import org.apache.spark.sql.catalyst.catalog.{CatalogStatistics,
+  CreateTableEvent}
 import org.apache.spark.sql.graftbridge.ListenerBridge
 
 /** `Tables.registerSome` registers a batch of tables concurrently; these
   * pin what the concurrency must not change: the statistics CBO costs
   * joins with, the caller's job group on every job it launches, and that
-  * nothing it started still runs once it has returned or thrown. Each test
+  * an interrupted caller throws before its first catalog write. Each test
   * registers a fresh linked copy of `sf`, whose new database starts with
   * an empty statistics store, so every table runs CREATE + ANALYZE. */
 class TablesRegistrationSpec extends SparkSpec {
@@ -70,15 +72,12 @@ class TablesRegistrationSpec extends SparkSpec {
   }
 
   test("an interrupted registration stops its other tables before it throws") {
+    // a new directory, so its database is new too: had the call reached
+    // CREATE DATABASE, Spark would swallow the interrupt while posting the
+    // catalog event ("Interrupted while posting") and drop SharedState's
+    // catalog-event listener, and all ten tables would register
     withLinkedCopy("graft-interrupt-sfdir") { dir =>
-      // the directory's database exists, as after any earlier registration:
-      // creating it posts a catalog event, and an interrupted caller loses
-      // its interrupt there (Spark logs "Interrupted while posting" and
-      // drops that listener), so the call would never reach its first wait
-      spark.sql(s"CREATE DATABASE IF NOT EXISTS ${Tables.database(dir)}")
       @volatile var thrown: Option[Throwable] = None
-      // interrupted before the call: its first wait on a table throws while
-      // the pool's workers have just started
       val caller = new Thread(() => {
         Thread.currentThread.interrupt()
         try Tables.registerSome(spark, dir, Tables.names): Unit
@@ -87,17 +86,23 @@ class TablesRegistrationSpec extends SparkSpec {
       caller.start()
       caller.join()
       assert(thrown.exists(_.isInstanceOf[InterruptedException]), thrown)
-      // a worker still running after the throw would go on to CREATE,
-      // ANALYZE or (interrupted) drop its table later
-      def catalog() = {
-        val c = spark.sessionState.catalog
-        c.listTables(Tables.database(dir)).map(id =>
-          id.table -> c.getTempViewOrPermanentTableMetadata(id).stats).toMap
+      // it threw before the first catalog write, so no table started
+      assert(!spark.catalog.databaseExists(Tables.database(dir)))
+      // SharedState still forwards catalog events to the listener bus
+      val created = mutable.ArrayBuffer[String]()
+      val listener = new SparkListener {
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case c: CreateTableEvent if c.database == Tables.database(dir) =>
+            created.synchronized(created += c.name): Unit
+          case _ => ()
+        }
       }
-      val left = catalog()
-      Thread.sleep(2000)
-      assert(catalog() == left)
-      assert(Tables.registerSome(spark, dir, Tables.names).isEmpty)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        assert(Tables.registerSome(spark, dir, Tables.names).isEmpty)
+        ListenerBridge.drain(spark.sparkContext)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(created.synchronized(created.toSet).contains("lineitem"), created)
       assert(catalogStats(dir).values.forall(_.exists(_.rowCount.isDefined)))
     }
   }

@@ -36,13 +36,4 @@ class PortableSpec extends SparkSpec {
       .select(shingles(tokens(col("t")), 3)).head.getSeq[String](0)
     assert(got.isEmpty)
   }
-
-  test("cosine6 on identical / orthogonal vectors") {
-    val df = Seq((Seq(1.0, 0.0), Seq(1.0, 0.0), Seq(0.0, 1.0)))
-      .toDF("a", "b", "c")
-    val row = df.select(cosine6(col("a"), col("b")), cosine6(col("a"), col("c")))
-      .head
-    assert(row.getDouble(0) == 1.0)
-    assert(row.getDouble(1) == 0.0)
-  }
 }

@@ -42,22 +42,4 @@ class IngestSpec extends SparkSpec {
     assert(back.map(r => (r.getInt(0), r.getString(1), r.getFloat(2))).toSeq
       == Seq((1, "alice", 10.5f), (2, "bob", 20.25f)))
   }
-
-  test("jsonToParquet ingests ndjson with an explicit schema") {
-    val dir = Files.createTempDirectory("graft-json")
-    val in = dir.resolve("in.ndjson")
-    Files.writeString(in,
-      """{"id": 1, "name": "alice", "bal": 10.5}
-        |{"id": 2, "name": "bob", "bal": 20.25}
-        |""".stripMargin)
-    val schema = StructType(Seq(
-      StructField("id", IntegerType),
-      StructField("name", StringType),
-      StructField("bal", FloatType)))
-    val out = dir.resolve("out.parquet").toString
-    Ingest.jsonToParquet(spark, in.toString, schema, out)
-    val back = spark.read.parquet(out).orderBy("id").collect()
-    assert(back.map(r => (r.getInt(0), r.getString(1), r.getFloat(2))).toSeq
-      == Seq((1, "alice", 10.5f), (2, "bob", 20.25f)))
-  }
 }
